@@ -10,20 +10,22 @@ partition list comes from Iceberg snapshot metadata, not a data scan:
 * **step 0** — the global exact-dup index (phash → keeper) is computed once
   and persisted; every partition job reuses it, so resumed runs produce
   byte-identical keep/drop decisions to a single-shot run.
-* **per partition** — read only that partition (partition pruning: the
-  ``part = N`` filter reaches the parquet scan), run the pipeline, write
-  ``out/part=N``, then commit one lineage marker ``_manifest/part-N.json``
-  (partition, rows in/kept/dropped, scrub counts, wall seconds).  The
-  marker is written only AFTER the partition's output commits, so a crash
-  mid-partition re-runs exactly that partition on resume.
+* **per partition** — filter the corpus (read once per call) to that
+  partition (partition pruning: the ``part = N`` filter reaches the parquet
+  scan), run the pipeline, write ``out/part=N``, then commit one lineage
+  marker ``_manifest/part-N.json`` (partition, rows in/kept/dropped, scrub
+  counts, drop-reason counts, wall seconds).  The lineage row comes from an
+  ``Observation`` on the write itself (``pipeline.lineage_columns``), so it
+  costs no job of its own.  The marker is written only AFTER the
+  partition's output commits, so a crash mid-partition re-runs exactly
+  that partition on resume.
 
 The manifest lives NEXT TO the output and is accessed through the Hadoop
 FileSystem API (``graft/io.py``), so ``out_path`` may be ``file:``,
 ``hdfs://`` or ``s3a://`` — exactly where a cluster run would put it.  One
 whole-file marker per partition (create-with-overwrite, idempotent) rather
 than appending a shared JSONL: object stores have no append, and a
-re-driven partition simply overwrites its own marker.  Outputs written by
-older versions (single ``_manifest.jsonl``) are still read on resume.
+re-driven partition simply overwrites its own marker.
 """
 
 from __future__ import annotations
@@ -32,17 +34,20 @@ import json
 import logging
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from dataqualitycontroltool_spark.graft import io as gio
 from dataqualitycontroltool_spark.graft.io import corpus_partitions, read_corpus
-from dataqualitycontroltool_spark.graft.pipeline import dedup_index, run_pipeline
+from dataqualitycontroltool_spark.graft.pipeline import (
+    dedup_index,
+    lineage_columns,
+    run_pipeline,
+)
 from dataqualitycontroltool_spark.graft.rules import KeepDropConfig
 
 logger = logging.getLogger(__name__)
 
 MANIFEST_DIR = "_manifest"
-LEGACY_MANIFEST = "_manifest.jsonl"
 DEDUP_DIR = "_dedup_index"
 
 
@@ -56,12 +61,6 @@ def read_manifest(out_path: str, spark: SparkSession | None = None) -> dict[int,
     if spark is None:  # pragma: no cover - needs a session for the Hadoop FS
         raise RuntimeError("read_manifest requires an active SparkSession")
     done: dict[int, dict] = {}
-    legacy = _join(out_path, LEGACY_MANIFEST)
-    if gio.fs_exists(spark, legacy):
-        for line in gio.fs_read_text(spark, legacy).splitlines():
-            if line.strip():
-                row = json.loads(line)
-                done[int(row["part"])] = row
     mdir = _join(out_path, MANIFEST_DIR)
     for name in gio.fs_list_names(spark, mdir):
         if name.startswith("part-") and name.endswith(".json"):
@@ -83,12 +82,6 @@ def read_manifest(out_path: str, spark: SparkSession | None = None) -> dict[int,
 def _commit_manifest(spark: SparkSession, out_path: str, row: dict) -> None:
     marker = _join(out_path, MANIFEST_DIR, f"part-{int(row['part'])}.json")
     gio.fs_write_text(spark, marker, json.dumps(row) + "\n")
-
-
-def list_partitions(spark: SparkSession, in_path: str) -> list[int]:
-    # in_path may be a parquet directory or a catalog (Iceberg) table ref;
-    # for Iceberg the partition list comes from snapshot metadata, not a scan
-    return corpus_partitions(spark, in_path)
 
 
 def ensure_dedup_index(
@@ -123,38 +116,28 @@ def run_resumable(
     done = read_manifest(out_path, spark)
     idx = ensure_dedup_index(spark, in_path, out_path, cfg)
 
-    written: list[dict] = []
-    pending = [p for p in list_partitions(spark, in_path) if p not in done]
+    # in_path may be a parquet directory or a catalog (Iceberg) table ref;
+    # for Iceberg the partition list comes from snapshot metadata, not a scan
+    pending = [p for p in corpus_partitions(spark, in_path) if p not in done]
     if max_partitions is not None:
         pending = pending[:max_partitions]
 
+    corpus = read_corpus(spark, in_path)
+    written: list[dict] = []
     for part in pending:
         t0 = time.perf_counter()
-        df = read_corpus(spark, in_path).where(F.col("part") == part)
-        result = run_pipeline(df, cfg, dedup=idx).drop("part")
+        result = run_pipeline(corpus.where(F.col("part") == part), cfg, dedup=idx)
+        # observe() is the last operator before the sink, so the lineage row
+        # is aggregated inside the write's own result stage (each task
+        # counted once) and obs.get returns only after the output commits
+        obs = Observation()
         (
-            result.write.mode("overwrite")
+            result.drop("part").observe(obs, *lineage_columns())
+            .write.mode("overwrite")
             .parquet(_join(out_path, f"part={part}"))
         )
-        agg = (
-            spark.read.parquet(_join(out_path, f"part={part}"))
-            .agg(
-                F.count("*").alias("rows_in"),
-                F.sum(F.col("keep").cast("long")).alias("kept"),
-                F.sum((F.col("n_scrub_hits") > 0).cast("long")).alias("rows_scrubbed"),
-                F.sum("n_scrub_hits").alias("scrub_hits"),
-            )
-            .collect()[0]
-        )
-        row = {
-            "part": int(part),
-            "rows_in": agg["rows_in"],
-            "kept": agg["kept"] or 0,
-            "dropped": agg["rows_in"] - (agg["kept"] or 0),
-            "rows_scrubbed": agg["rows_scrubbed"] or 0,
-            "scrub_hits": agg["scrub_hits"] or 0,
-            "wall_s": round(time.perf_counter() - t0, 3),
-        }
+        row = {"part": int(part), **obs.get,
+               "wall_s": round(time.perf_counter() - t0, 3)}
         _commit_manifest(spark, out_path, row)
         written.append(row)
     return written

@@ -17,10 +17,11 @@ catalog table on a cluster:
   scan; the metadata table is O(#partitions)), falling back to a distinct
   scan for non-Iceberg catalog tables (e.g. temp views in tests).
 
-Output stays a parquet directory + ``_manifest.jsonl``: the manifest is the
-resume protocol's source of truth and must be listable/appendable without a
-catalog; on a cluster the filtered output can be re-registered or
-``writeTo``-appended to a table downstream of the manifest commit.
+Output stays a parquet directory (``part=N``) + one ``_manifest/part-N.json``
+marker per partition: the manifest is the resume protocol's source of truth
+and must be listable/writable without a catalog; on a cluster the filtered
+output can be re-registered or ``writeTo``-appended to a table downstream of
+the manifest commit.
 """
 
 from __future__ import annotations

@@ -16,11 +16,13 @@ strategy:
 3. **cheap metadata rules** first (fmt/w/h/caption length) — pure codegen.
 4. **model stages** — langid + perplexity (Arrow-batched pandas UDFs) and
    decode validation, computed ONLY for rows that still survive the cheap
-   rules when ``short_circuit=True`` (at 10^12 scale, not decoding images
-   that a metadata rule already killed is a large saving).
+   rules (at 10^12 scale, not decoding images that a metadata rule already
+   killed is a large saving).
 5. **scrub** — regexp_replace chain (codegen).
 6. **keep/drop** — rule engine when-chain.
-7. **lineage** — per-partition metrics aggregate.
+7. **lineage** — per-partition metrics aggregate (:func:`lineage_columns`,
+   one definition shared by :func:`lineage_metrics` and the checkpoint
+   sink's ``Observation``).
 
 Columns out: every input column (minus ``bytes``) + ``lang``, ``ppl``,
 ``decode_ok``, ``dec_w``, ``dec_h``, ``psnr_db``, ``is_dup``,
@@ -29,13 +31,13 @@ Columns out: every input column (minus ``bytes``) + ``lang``, ``ppl``,
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from dataqualitycontroltool_spark.graft import scrub
 from dataqualitycontroltool_spark.graft.decode import decode_check
 from dataqualitycontroltool_spark.graft.langid import langid
 from dataqualitycontroltool_spark.graft.perplexity import perplexity
-from dataqualitycontroltool_spark.graft.rules import KeepDropConfig, apply_rules
+from dataqualitycontroltool_spark.graft.rules import RULE_ORDER, KeepDropConfig, apply_rules
 
 OUTPUT_COLUMNS = [
     "image_id", "w", "h", "fmt", "caption", "phash", "part",
@@ -106,7 +108,6 @@ def run_pipeline(
     cfg: KeepDropConfig | None = None,
     n_partitions: int | None = None,
     dedup: DataFrame | None = None,
-    short_circuit: bool = True,
 ) -> DataFrame:
     """Full keep/drop + scrub plan over an image+caption DataFrame.
 
@@ -131,12 +132,8 @@ def run_pipeline(
             idx = hamming_dedup_index(df, cfg.dedupe_on, cfg.dedupe_hamming)
         else:
             idx = dedup_index(df, cfg.dedupe_on)
-        # indexes persisted before n_members existed lack the column — fall
-        # back to treating every group as a candidate (the join result is
-        # identical; the filter is only a size optimization)
-        if "n_members" in idx.columns:
-            idx = idx.where(F.col("n_members") > 1)
-        dup_groups = idx.select(cfg.dedupe_on, "keeper_id")
+        dup_groups = idx.where(F.col("n_members") > 1).select(
+            cfg.dedupe_on, "keeper_id")
         if not n_partitions:
             dup_groups = F.broadcast(dup_groups)
         df = df.join(dup_groups, on=cfg.dedupe_on, how="left").withColumn(
@@ -168,8 +165,8 @@ def run_pipeline(
     # ArrowEvalPython node (a `when` around the UDF does NOT skip it), so the
     # short-circuit nulls the UDF *inputs*: dead rows cost one null check in
     # the batch instead of a decode/score.
-    cap_in = F.when(~cap_missing, cap) if short_circuit else cap
-    bytes_in = F.when(cheap_alive, F.col("bytes")) if short_circuit else F.col("bytes")
+    cap_in = F.when(~cap_missing, cap)
+    bytes_in = F.when(cheap_alive, F.col("bytes"))
 
     df = df.withColumns(
         {
@@ -191,31 +188,32 @@ def run_pipeline(
     return apply_rules(df, cfg).select(*OUTPUT_COLUMNS)
 
 
-def lineage_metrics(result: DataFrame, by: str = "part") -> DataFrame:
-    """Per-partition lineage row (north_rule: 'per-partition lineage +
-    metrics'): input/kept/dropped counts, drop-reason map, scrub totals.
+def lineage_columns() -> list[Column]:
+    """The per-partition lineage aggregate (north_rule: 'per-partition
+    lineage + metrics'): input/kept/dropped counts, scrub totals and a
+    drop-reason map holding only the reasons that fired.  Plain aggregate
+    expressions, so the same list serves a ``groupBy().agg`` and an
+    ``Observation`` on the sink write."""
+    return [
+        F.count(F.lit(1)).alias("rows_in"),
+        F.count_if(F.col("keep")).alias("kept"),
+        F.count_if(~F.col("keep")).alias("dropped"),
+        F.count_if(F.col("n_scrub_hits") > 0).alias("rows_scrubbed"),
+        F.coalesce(F.sum("n_scrub_hits"), F.lit(0).cast("long")).alias("scrub_hits"),
+        F.map_filter(
+            F.map_from_arrays(
+                F.array(*[F.lit(r) for r in RULE_ORDER]),
+                F.array(*[F.count_if(F.col("drop_reason") == r) for r in RULE_ORDER]),
+            ),
+            lambda _, n: n > 0,
+        ).alias("drop_reasons"),
+    ]
 
-    Two hash aggregations (both map-side partial) — no window, no skew risk.
-    """
-    base = result.groupBy(by).agg(
-        F.count("*").alias("rows_in"),
-        F.sum(F.col("keep").cast("long")).alias("kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("dropped"),
-        F.sum((F.col("n_scrub_hits") > 0).cast("long")).alias("rows_scrubbed"),
-        F.sum("n_scrub_hits").alias("scrub_hits"),
-    )
-    reasons = (
-        result.where(~F.col("keep"))
-        .groupBy(by, "drop_reason")
-        .agg(F.count("*").alias("n"))
-        .groupBy(by)
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("drop_reason", "n")))
-            ).alias("drop_reasons")
-        )
-    )
-    return base.join(reasons, on=by, how="left")
+
+def lineage_metrics(result: DataFrame, by: str = "part") -> DataFrame:
+    """One lineage row per ``by`` value: a single map-side-partial hash
+    aggregation — no window, no join, no skew risk."""
+    return result.groupBy(by).agg(*lineage_columns())
 
 
 def drop_reason_histogram(result: DataFrame) -> DataFrame:

@@ -706,7 +706,10 @@ def _skew_safe_self_pairs(
     hot_bl = bl.join(hot_keys, key_cols, "left_semi").withColumn(
         "salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(s))
     )
-    grid = F.explode(F.array(*[F.lit(j) for j in range(s)]))
+    # bigint like `salt`: an int cell key would make the join cast it, and
+    # the cast key no longer matches the repartition below — Spark then
+    # adds a second (AQE-coalescible) exchange on each side
+    grid = F.explode(F.array(*[F.lit(j).cast("long") for j in range(s)]))
     left = hot_bl.withColumn("cell_j", grid)   # occupies cells (salt, j)
     right = hot_bl.withColumn("cell_i", grid)  # occupies cells (i, salt)
     # EXPLICIT-N repartition by the cell keys, both sides in join-key order:

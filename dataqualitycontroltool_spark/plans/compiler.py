@@ -187,8 +187,12 @@ class FieldPlan:
             )
         if s.miptype == "date":
             # 7-regex format inference + reparse + reformat (date.py:88-106);
-            # runs as a vectorized pandas UDF (SURVEY §7 risk 5).
-            return _date_suggest_udf(self._py_fmt)(c)
+            # runs as a vectorized pandas UDF (SURVEY §7 risk 5).  The UDF
+            # sits in an unconditional ArrowEvalPython node, so only
+            # dtype-violating cells are passed in; every other cell arrives
+            # as null and costs no Python parse.
+            return _date_suggest_udf(self._py_fmt)(
+                F.when(self.status(c) == STATUS_DTYPE, c))
         # numerical/text/nominal suggestd → null
         # (numerical.py:112-116, text.py:88-92, nominal.py:62-66)
         return F.lit(None).cast(T.StringType())

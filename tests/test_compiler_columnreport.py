@@ -107,6 +107,20 @@ def test_status_suggestion_corrected(spark, name):
     assert [r["v__corrected"] for r in rows] == case["corrected"]
 
 
+def test_date_suggestion_udf_sees_only_dtype_violations(spark):
+    """The date-suggestion pandas UDF runs in an unconditional
+    ArrowEvalPython node, so its input must be nulled for every cell that
+    is not a dtype violation: valid, missing and constraint-violating cells
+    then reach Python as nulls instead of being parsed."""
+    import re
+
+    _, out = _validated(spark, CASES["date"])
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    udf_nodes = [ln for ln in executed.splitlines() if "ArrowEvalPython" in ln]
+    assert len(udf_nodes) == 1, executed
+    assert re.search(r"suggest\(CASE WHEN .* THEN v#\d+ END\)", udf_nodes[0]), udf_nodes[0]
+
+
 @pytest.mark.parametrize("name", list(CASES))
 def test_null_accounting(spark, name):
     """columnreport.py nulls_total/not_nulls_total goldens, pre/post correction."""

@@ -238,12 +238,16 @@ def test_banded_hamming_hot_bucket_salting_exact(spark):
             df, "id", "fp", 3, hot_bucket_threshold=0
         ).collect()
     )
-    salted = sorted(
-        tuple(r)
-        for r in dedup.banded_hamming_pairs(
-            df, "id", "fp", 3, hot_bucket_threshold=64
-        ).collect()
-    )
+    salted_df = dedup.banded_hamming_pairs(df, "id", "fp", 3, hot_bucket_threshold=64)
+    # the cell keys share salt's bigint type, so the grid join reuses the two
+    # explicit-count repartitions: no further (AQE-coalescible) exchange over
+    # the salt and cell columns that would merge the grid back into few tasks
+    initial = salted_df._jdf.queryExecution().executedPlan().toString()
+    grid_exchanges = [ln for ln in initial.splitlines()
+                      if "Exchange hashpartitioning" in ln and "salt#" in ln]
+    assert len(grid_exchanges) == 2, initial
+    assert all("REPARTITION_BY_NUM" in ln for ln in grid_exchanges), grid_exchanges
+    salted = sorted(tuple(r) for r in salted_df.collect())
     assert plain == salted and len(plain) > 50
     assert len(set(plain)) == len(plain)
 

@@ -62,6 +62,47 @@ def test_lineage_manifest_contents(spark, paths):
         assert row["rows_scrubbed"] >= 0
 
 
+def test_manifest_drop_reasons_match_histogram(spark, paths):
+    """The markers' drop-reason counts come from an Observation on the
+    partition write; summed over partitions they must equal the histogram
+    of the committed output exactly."""
+    from dataqualitycontroltool_spark.graft.pipeline import drop_reason_histogram
+
+    _, out_path, _ = paths
+    manifest = checkpoint.read_manifest(out_path)
+    summed: dict[str, int] = {}
+    for row in manifest.values():
+        assert sum(row["drop_reasons"].values()) == row["dropped"]
+        for reason, n in row["drop_reasons"].items():
+            summed[reason] = summed.get(reason, 0) + n
+    hist = {r.reason: r.n_rows for r in
+            drop_reason_histogram(checkpoint.read_output(spark, out_path)).collect()}
+    assert hist.pop("kept") == sum(r["kept"] for r in manifest.values())
+    assert summed == hist
+
+
+def test_jobs_per_partition(spark, paths, tmp_path):
+    """Lineage rides on the partition write: beyond the per-call setup
+    (dedup index, partition list, one corpus read) each partition costs at
+    most its dedup broadcast and its write — no read-back, no re-aggregate."""
+    in_path, _, _ = paths
+    sc = spark.sparkContext
+
+    def jobs(name, **kw):
+        sc.setJobGroup(name, "run_resumable job count")
+        try:
+            checkpoint.run_resumable(
+                spark, in_path, str(tmp_path / name), KeepDropConfig(), **kw)
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    one = jobs("jobs-one-part", max_partitions=1)
+    every = jobs("jobs-all-parts")
+    assert every - one <= 2 * (N_PARTS - 1), (one, every)
+    assert every <= 20, every
+
+
 def test_catalog_table_ref_input(spark, paths, tmp_path):
     """in_path may be a catalog table ref instead of a parquet path (the
     Iceberg surface on a real cluster): same manifest, same output.  A temp
@@ -115,25 +156,6 @@ def test_uri_out_path_and_manifest_on_hadoop_fs(spark, paths, tmp_path):
            .select("image_id", "keep").toPandas()
            .sort_values("image_id").reset_index(drop=True))
     pd.testing.assert_frame_equal(got, exp)
-
-
-def test_legacy_jsonl_manifest_still_read(spark, tmp_path):
-    """Outputs written by older versions carry a single ``_manifest.jsonl``;
-    resume must honor it (and per-part markers take precedence)."""
-    out = tmp_path / "legacy_out"
-    out.mkdir()
-    (out / "_manifest.jsonl").write_text(
-        '{"part": 0, "rows_in": 10, "kept": 7, "dropped": 3}\n'
-        '{"part": 1, "rows_in": 10, "kept": 10, "dropped": 0}\n'
-    )
-    (out / "_manifest").mkdir()
-    (out / "_manifest" / "part-1.json").write_text(
-        '{"part": 1, "rows_in": 10, "kept": 9, "dropped": 1}\n'
-    )
-    manifest = checkpoint.read_manifest(str(out), spark)
-    assert sorted(manifest) == [0, 1]
-    assert manifest[0]["kept"] == 7
-    assert manifest[1]["kept"] == 9  # marker wins over the legacy line
 
 
 def test_corrupt_marker_treated_as_not_done(spark, tmp_path):
