@@ -1088,7 +1088,7 @@ def q_decontaminate_documents(spark, sf_dir):
 
 
 def q_connected_components_docs(spark, sf_dir):
-    """Transitive near-duplicate clusters: pointer-jumping connected
+    """Transitive near-duplicate clusters: large-star/small-star connected
     components over the MinHash-LSH pair graph — (id, comp) with comp = the
     minimum reachable doc_id.  Oracle: recursive-CTE transitive closure."""
     pairs = dedup.minhash_lsh_pairs(

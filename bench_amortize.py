@@ -2,7 +2,7 @@
 """Amortization evidence for the hamming near-dup graft metric (r4 verdict #8).
 
 At 8k rows the banded-hamming + connected-components phash index costs ~4s of
-FIXED setup (banded self-join planning + pointer-jumping round floor) on top
+FIXED setup (banded self-join planning + connected-components round floor) on top
 of the exact-dedup pipeline, which reads as a 2-3x img/s gap.  The claim to
 evidence: that cost is fixed (iteration rounds see only DISTINCT phashes that
 collide in a band, not images), so img/s CONVERGES toward the exact-dedup

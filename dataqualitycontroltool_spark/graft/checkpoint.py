@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from dataqualitycontroltool_spark.graft import io as gio
 from dataqualitycontroltool_spark.graft.io import corpus_partitions, read_corpus
 from dataqualitycontroltool_spark.graft.pipeline import (
-    dedup_index,
+    build_dedup_index,
     lineage_columns,
     run_pipeline,
 )
@@ -92,13 +92,7 @@ def ensure_dedup_index(
         return None
     idx_path = _join(out_path, DEDUP_DIR)
     if not gio.fs_exists(spark, _join(idx_path, "_SUCCESS")):
-        from dataqualitycontroltool_spark.graft.pipeline import hamming_dedup_index
-
-        df = read_corpus(spark, in_path)
-        if getattr(cfg, "dedupe_hamming", 0) > 0:
-            idx = hamming_dedup_index(df, cfg.dedupe_on, cfg.dedupe_hamming)
-        else:
-            idx = dedup_index(df, cfg.dedupe_on)
+        idx = build_dedup_index(read_corpus(spark, in_path), cfg)
         idx.write.mode("overwrite").parquet(idx_path)
     return spark.read.parquet(idx_path)
 

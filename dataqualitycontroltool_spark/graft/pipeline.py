@@ -103,6 +103,14 @@ def hamming_dedup_index(
     )
 
 
+def build_dedup_index(df: DataFrame, cfg: KeepDropConfig) -> DataFrame:
+    """The dedup index ``cfg`` asks for: :func:`hamming_dedup_index` when
+    ``cfg.dedupe_hamming > 0``, else the exact :func:`dedup_index`."""
+    if cfg.dedupe_hamming > 0:
+        return hamming_dedup_index(df, cfg.dedupe_on, cfg.dedupe_hamming)
+    return dedup_index(df, cfg.dedupe_on)
+
+
 def run_pipeline(
     df: DataFrame,
     cfg: KeepDropConfig | None = None,
@@ -126,12 +134,7 @@ def run_pipeline(
     # shuffle layout; the join then hash-partitions by phash and the salt
     # re-spreads the hot clusters before the UDF stage.
     if cfg.dedupe_on:
-        if dedup is not None:
-            idx = dedup
-        elif getattr(cfg, "dedupe_hamming", 0) > 0:
-            idx = hamming_dedup_index(df, cfg.dedupe_on, cfg.dedupe_hamming)
-        else:
-            idx = dedup_index(df, cfg.dedupe_on)
+        idx = dedup if dedup is not None else build_dedup_index(df, cfg)
         dup_groups = idx.where(F.col("n_members") > 1).select(
             cfg.dedupe_on, "keeper_id")
         if not n_partitions:

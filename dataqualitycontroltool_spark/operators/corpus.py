@@ -489,7 +489,7 @@ def leakage_safe_split(
     """Dedup-aware train/valid/test assignment: near-duplicate documents
     must land in the SAME split (a near-copy of a training doc inside the
     eval split is leakage), so the split key is the doc's near-dup CLUSTER
-    label — MinHash-LSH pairs -> pointer-jumping connected components;
+    label — MinHash-LSH pairs -> large-star/small-star connected components;
     singletons are their own cluster — hashed through the same
     deterministic md5 band scheme as the samplers (first-8-hex threshold
     bands over the cumulative fractions, in the given order).  Returns

@@ -37,7 +37,7 @@ from __future__ import annotations
 from functools import reduce
 from operator import add
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
 # --------------------------------------------------------------------------
 # tokenization / shingling (shared with textstats)
@@ -194,7 +194,12 @@ def minhash_lsh_pairs(
     serialize into a single shuffle partition (kilobytes of input hiding
     quadratic work — AQE's byte-sized skew split never fires).  Buckets
     over ``hot_bucket_threshold`` entries therefore take the same exact
-    salt-grid self-join as the hamming index (`_skew_safe_self_pairs`)."""
+    salt-grid self-join as the hamming index (`_skew_safe_self_pairs`).
+
+    Eager detection: unless ``hot_bucket_threshold=0``, finding hot buckets
+    runs a Spark job (``groupBy`` + ``collect`` over a ``detect_sample``
+    sample of the band frame) when this function BUILDS the frame, not
+    when the returned frame is consumed."""
     rows_per_band = num_hashes // bands
     # The signature subplan is referenced by both sides of the band self-join
     # (and the shingle table again by the verifier), so Catalyst recomputes
@@ -584,7 +589,11 @@ def banded_hamming_pairs(
     map-side-combined count over the (small) band frame, and the grid leg
     is built only when a hot bucket actually exists (one bounded driver
     action on the aggregated bucket-count frame).  Exactness is pinned by
-    a pytest comparing salted vs plain output on a forced-hot corpus."""
+    a pytest comparing salted vs plain output on a forced-hot corpus.
+
+    Eager detection: unless ``hot_bucket_threshold=0``, that detection job
+    (``groupBy`` + ``collect``) runs when this function BUILDS the frame,
+    not when the returned frame is consumed."""
     if max_hamming > bands - 1:
         raise ValueError("banded hamming join is only exact for max_hamming <= bands-1")
     width = bits // bands
@@ -642,14 +651,13 @@ def _skew_safe_self_pairs(
         bucket_eq = eq if bucket_eq is None else (bucket_eq & eq)
     id_lt = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
 
-    if not 0.0 < detect_sample <= 1.0:
-        raise ValueError(
-            "detect_sample must be in (0, 1]; disable detection with "
-            "hot_bucket_threshold=0"
-        )
-
     hot_rows = []
     if hot_bucket_threshold:
+        if not 0.0 < detect_sample <= 1.0:
+            raise ValueError(
+                "detect_sample must be in (0, 1]; disable detection with "
+                "hot_bucket_threshold=0"
+            )
         # the counts aggregate recomputes bl's upstream once more —
         # deliberately NOT localCheckpoint'd: the eager barrier serializes
         # the caller's one-shot pipeline (gotcha: measured +3.3s on the 8k
@@ -743,226 +751,77 @@ def _skew_safe_self_pairs(
 # connected components — transitive duplicate-cluster resolution
 # --------------------------------------------------------------------------
 
-# reliable-spill cadence for iterative loops: carried checkpoint stats grow
-# ~3× in bit-length per round (see connected_components docstring), so a
-# reset every 6 rounds bounds them at 3^6 ≈ 729 × the parquet file-size bits.
-_STATS_RESET_EVERY = 6
-
-
-def _reliable_reset(df: DataFrame, spill_root: str, rnd: int) -> DataFrame:
-    """Round-trip a (small) iteration frame through parquet: truncates both
-    lineage AND the carried Catalyst stats (a plain localCheckpoint keeps
-    the latter).  The parquet copy is also a durable restart point for the
-    algorithm — though NOT per-block fault tolerance: the localCheckpoint
-    rounds between resets still die with an executor, the same as plain
-    localCheckpoint iteration."""
-    path = f"{spill_root}/round_{rnd}"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
-def _spill_root(pairs: DataFrame) -> tuple[str, bool]:
-    """(directory for reliable spills, created_locally).  Honors the
-    session checkpoint dir when the deployment set one (shared storage on
-    a real cluster); falls back to a driver-local tempdir ONLY on local
-    masters — on a cluster a driver-local path would scatter task files
-    across executor disks and silently lose the frame on re-read, so the
-    missing checkpoint dir is an error there.  A uuid component keeps
-    concurrent runs sharing one checkpoint dir from clobbering each
-    other's round files."""
-    import tempfile
-    import uuid
-
-    sc = pairs.sparkSession.sparkContext
-    base = sc.getCheckpointDir()
-    if base:
-        return (
-            f"{base.rstrip('/')}/dqc_cc_spill/{uuid.uuid4().hex}",
-            False,
-        )
-    if not sc.master.startswith("local"):
-        raise RuntimeError(
-            "connected_components needs a shared checkpoint directory on a "
-            "cluster (sc.setCheckpointDir(...)): the periodic stats-reset "
-            "spill must be readable by the driver and every executor"
-        )
-    return tempfile.mkdtemp(prefix="dqc_cc_spill_"), True
+# safety cap, not a tuning knob: large-star/small-star converges in
+# O(log² n) rounds on any id order (random-order paths of 128 / 4,000 /
+# 20,000 nodes take 7 / 11 / 13), so reaching the cap means a bug
+_MAX_ROUNDS = 100
 
 
 def connected_components(
-    pairs: DataFrame, max_iter: int = 25, a: str = "id_a", b: str = "id_b",
-    jumps: int = 3,
+    pairs: DataFrame, a: str = "id_a", b: str = "id_b"
 ) -> DataFrame:
-    """(id, component) for every node in the pair graph; component = the
-    MINIMUM id reachable from the node (the canonical survivor).
+    """(id, comp) for every node in the pair graph; comp = the least id in
+    the node's component (the canonical survivor).  Any orderable id type
+    works (string ids: the lexicographic least).
 
-    Min-label propagation WITH POINTER JUMPING: every node starts labeled
-    with itself; each round takes the min over its neighbors' labels and
-    then path-halves (label := label of label), so convergence is
-    O(log diameter) — plain propagation is O(diameter) and a 96k-image
-    near-dup phash graph was measured to chain past 25 hops (perturbed
-    variants connect through intermediate hashes).  Each round is two
-    equi-joins + one aggregate; ``localCheckpoint`` truncates the lineage so
-    the plan doesn't grow exponentially across iterations (the
-    iterative-algorithm pattern Catalyst can't express declaratively —
-    SURVEY §2.8's 'genuinely non-SQL-expressible' class).
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014): O(log² n) rounds
+    whatever order the ids fall in along a chain.  Edges are kept as
+    (hi, lo) with hi > lo (plus the centre loops below), and each round is
+    ONE ``localCheckpoint``:
 
-    Raises if not converged within ``max_iter`` (with jumping that needs a
-    diameter over ~2^25 — effectively impossible).
+    * large-star — over the symmetrised edges, m(u) = least(u, min
+      neighbour); every neighbour v > u is re-pointed to m(u);
+    * small-star — per hi, m = min(lo); hi and each of its lo's are
+      re-pointed to m.
 
-    Stats truncation (r5): ``localCheckpoint`` cuts the LINEAGE but carries
-    the origin plan's Catalyst statistics into the new ``LogicalRDD`` leaf
-    (``LogicalRDD.fromDataset`` → ``rewriteStatsAndConstraints``).  Each
-    round's plan multiplies leaf ``sizeInBytes`` at every join
-    (``SizeInBytesOnlyStatsPlanVisitor.visitJoin``), so the carried BigInt
-    TRIPLES its bit-length per round — by round ~17 a single driver-side
-    stats product runs for minutes on one core, and by ~20 it exceeds
-    BigInteger's 2^31-bit ceiling (measured: a 32k-image hamming graph with
-    ~20-round chains pinned the driver for 19 min inside
-    ``BigInteger.multiplyToomCook3``).  Every ``_STATS_RESET_EVERY`` rounds
-    the labels frame therefore takes a RELIABLE round-trip through parquet
-    (honoring ``sc.setCheckpointDir`` when set — at cluster scale that is
-    also the fault-tolerance story: localCheckpoint dies with an executor),
-    which resets the carried stats to the file size.  Worst-case carried
-    magnitude is then 3^k·file_bits — microseconds, forever."""
-    edges = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-    sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.distinct().localCheckpoint()
-    # size the iteration parallelism from the ACTUAL edge count — one
-    # in-memory pass over the partitions the checkpoint above just
-    # materialized (cheap relative to the iterations, each of which scans
-    # the edges several times; NOT free).  A near-dup graph is usually
-    # orders of magnitude smaller than the corpus, and iterating a
-    # 256-edge graph across 32-partition shuffles is pure stage-scheduling
-    # overhead (measured 5.1s → ~1s at sf0.1); huge graphs keep full
-    # parallelism at ~1M edges/partition and skip the extra repartition.
-    n_edges = sym.count()
-    parallelism = pairs.sparkSession.sparkContext.defaultParallelism
-    target = max(1, min(parallelism, n_edges // 1_000_000 + 1))
-    if target < parallelism:
-        sym = sym.repartition(target, "src").localCheckpoint()
-    labels = (
-        sym.select(F.col("src").alias("id")).distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint()
-    )
+    Both steps are windows, not joins.  ``localCheckpoint`` carries the
+    origin plan's Catalyst stats into its leaf; a join in the carried plan
+    would multiply them every round (a few joins per round triple the
+    ``sizeInBytes`` bit length until one stats product pins the driver for
+    minutes), while a window only scales them by a row-size ratio.  The
+    carried figure grows by about a bit per round, so no spill is needed to
+    reset it.
 
-    # convergence check, two variants by id type:
-    # * integral ids — per-node labels only ever DECREASE (least of old and
-    #   candidates), so Σcomp is strictly monotone and an equal EXACT sum
-    #   (decimal(38,0), no overflow at any node count) ⇔ no node changed:
-    #   one single-stage aggregate per round.
-    # * anything else (string ids are legitimate: least() = lexicographic
-    #   min, a valid canonical survivor) — numeric-sum monotonicity does
-    #   not apply (and ANSI would throw on the cast), so keep the
-    #   type-agnostic join + changed-count.
-    id_dtype = dict(labels.dtypes)["id"]
-    integral_ids = id_dtype in ("tinyint", "smallint", "int", "bigint", "long")
+    Convergence is observed on the round's own checkpoint job: ``moved``
+    counts large-star edges whose u has a smaller neighbour, ``multi``
+    counts small-star edges whose lo is not the least lo of their hi.  Both
+    are 0 exactly when every component is a star centred on its least id.
 
-    def unchanged(new_lb: DataFrame, old_lb: DataFrame, prev) -> tuple:
-        if integral_ids:
-            s = new_lb.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-            return s == prev, s
-        n = (
-            new_lb.alias("n").join(old_lb.alias("o"), "id")
-            .where(F.col("n.comp") != F.col("o.comp")).count()
+    Small-star also emits a loop (m, m) for each centre m, so the converged
+    frame holds exactly one row per node — (leaf, centre) or (centre,
+    centre) — and is the result as it stands.  A self-pair (x, x) in the
+    input is such a loop: x comes out as its own component."""
+    hi, lo, u, v, m = (F.col(c) for c in ("hi", "lo", "u", "v", "m"))
+
+    def emit(df: DataFrame, *rows: tuple) -> DataFrame:
+        """(hi, lo) rows, several per input row: one explode, one scan"""
+        structs = [F.struct(x.alias("hi"), y.alias("lo")) for x, y in rows]
+        return df.select(F.explode(F.array(*structs)).alias("e")).select("e.*")
+
+    edges = pairs.select(F.greatest(a, b).alias("hi"), F.least(a, b).alias("lo"))
+    for _ in range(_MAX_ROUNDS):
+        moved, multi = Observation(), Observation()
+        large = (
+            emit(edges, (hi, lo), (lo, hi)).toDF("u", "v")
+            .withColumn("m", F.least(u, F.min(v).over(Window.partitionBy(u))))
+            .observe(moved, F.count(F.when((v > u) & (m < u), 1)).alias("n"))
+            # a loop survives only on a node with no smaller neighbour
+            .where((v > u) | ((v == u) & (m == u)))
+            .select(v.alias("hi"), m.alias("lo"))
         )
-        return n == 0, None
-
-    prev_sum = (
-        labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-        if integral_ids else None
-    )
-    spill_root, spill_is_local = None, False
-    try:
-        for rnd in range(max_iter):
-            neighbor_min = (
-                sym.join(labels, sym.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("comp").alias("ncomp"))
-            )
-            propagated = labels.join(
-                neighbor_min, labels.id == neighbor_min.src, "left"
-            ).select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce("ncomp", F.col("comp"))
-                ).alias("comp"),
-            )
-            # pointer jumping: comp := comp(comp), applied `jumps` times per
-            # round.  The jump table is the PREVIOUS round's labels — already
-            # materialized by last round's localCheckpoint — not this round's
-            # `propagated`: a self-join on `propagated` would compute the
-            # neighbor-min shuffle TWICE per round (ReuseExchange does not
-            # fire across these branches — measured on the banded self-join,
-            # PLANS.md), doubling the dominant per-iteration cost at any
-            # scale.  Jumping through the one-round-stale table is still
-            # monotone (labels[c] <= c for every node id c) and still
-            # O(log diameter); the fixpoint is unchanged because plain
-            # min-propagation alone already converges to the component
-            # minimum — jumping only accelerates it.
-            #
-            # Why MULTIPLE jumps per round (r5): the per-round cost is
-            # dominated by the edges-sized neighbor-min join + the fixed
-            # Spark job floor, while each jump is a join between two
-            # LABELS-sized frames whose jump side is a materialized
-            # checkpoint leaf (re-scanned from the block manager, never
-            # recomputed).  Chaining j jumps contracts path length
-            # geometrically per round, so round count drops ~log-fold for
-            # near-free: measured on a 4000-node path graph (worst-case
-            # diameter), jumps 1/2/3/4 → 6.3/4.9/4.3/4.3 s — default 3,
-            # where the gain saturates.
-            new_labels = propagated
-            for j in range(jumps):
-                new_labels = (
-                    new_labels.alias("x")
-                    .join(
-                        labels.select(
-                            F.col("id").alias("_pid"), F.col("comp").alias("_pcomp")
-                        ).alias(f"y{j}"),
-                        F.col("x.comp") == F.col(f"y{j}._pid"),
-                        "left",
-                    )
-                    .select(
-                        F.col("x.id").alias("id"),
-                        F.least(
-                            F.col("x.comp"), F.coalesce("_pcomp", F.col("x.comp"))
-                        ).alias("comp"),
-                    )
-                )
-            if (rnd + 1) % _STATS_RESET_EVERY == 0:
-                # truncate the carried (and exponentially compounding)
-                # checkpoint stats — see the docstring's stats-truncation
-                # note.  The trailing localCheckpoint re-materializes the
-                # re-read frame in the block manager, so local spill files
-                # are disposable the moment the round completes.
-                if spill_root is None:
-                    spill_root, spill_is_local = _spill_root(pairs)
-                new_labels = _reliable_reset(new_labels, spill_root, rnd)
-            new_labels = new_labels.localCheckpoint()
-            done, prev_sum = unchanged(new_labels, labels, prev_sum)
-            labels = new_labels
-            if done:
-                return labels
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+        small = large.withColumn("m", F.min(lo).over(Window.partitionBy(hi))).observe(
+            multi, F.count(F.when((lo < hi) & (lo > m), 1)).alias("n")
         )
-    finally:
-        # every round (including a reset round) ends in localCheckpoint, so
-        # the returned frame never depends on spill files — both kinds are
-        # disposable the moment the loop exits
-        if spill_root and spill_is_local:
-            import shutil
-
-            shutil.rmtree(spill_root, ignore_errors=True)
-        elif spill_root:
-            try:  # best-effort: shared-checkpoint spills via the Hadoop FS
-                sess = pairs.sparkSession
-                jpath = sess._jvm.org.apache.hadoop.fs.Path(spill_root)
-                hconf = sess.sparkContext._jsc.hadoopConfiguration()
-                jpath.getFileSystem(hconf).delete(jpath, True)
-            except Exception:
-                pass
+        edges = emit(small, (lo, m), (hi, m)).distinct().localCheckpoint()
+        # an empty graph: AQE prunes the whole plan, observing nodes
+        # included, to an empty relation (no partitions) before any runs
+        empty = edges.rdd.getNumPartitions() == 0
+        if empty or (moved.get["n"] == 0 and multi.get["n"] == 0):
+            return edges.toDF("id", "comp")
+    raise RuntimeError(
+        f"connected_components did not converge in {_MAX_ROUNDS} rounds"
+    )
 
 
 def duplicate_clusters(

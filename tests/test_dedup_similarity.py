@@ -2,6 +2,8 @@
 parity harness can't exercise (short docs, exact-dup groups, LSH recall
 guarantee, simhash pigeonhole exactness, bucket membership)."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -205,8 +207,8 @@ def test_duplicate_clusters_transitive(spark):
 
 
 def test_connected_components_long_chain_converges(spark):
-    """Pointer jumping: a 60-hop chain collapses within the default round
-    budget (plain propagation would need 60 rounds and raise)."""
+    """A 60-hop chain collapses to one star in O(log² n) large-star /
+    small-star rounds (plain min-label propagation needs 60)."""
     pairs = spark.createDataFrame([(i, i + 1) for i in range(60)],
                                   "id_a long, id_b long")
     comps = dedup.connected_components(pairs)
@@ -252,6 +254,21 @@ def test_banded_hamming_hot_bucket_salting_exact(spark):
     assert len(set(plain)) == len(plain)
 
 
+def test_hot_bucket_detection_disabled_ignores_detect_sample(spark):
+    """hot_bucket_threshold=0 disables detection, so detect_sample is not
+    consulted (the ValueError itself points there); the pairs are the
+    plain join's.  With detection on, an out-of-range sample still raises."""
+    df = spark.createDataFrame(
+        [(0, 0b0000), (1, 0b0001), (2, 0b0111), (3, 2**62 - 1)], "id bigint, fp bigint")
+    plain = sorted(tuple(r) for r in dedup.banded_hamming_pairs(
+        df, "id", "fp", 3, hot_bucket_threshold=0).collect())
+    disabled = sorted(tuple(r) for r in dedup.banded_hamming_pairs(
+        df, "id", "fp", 3, hot_bucket_threshold=0, detect_sample=0).collect())
+    assert disabled == plain == [(0, 1, 1), (0, 2, 3), (1, 2, 2)]
+    with pytest.raises(ValueError, match="detect_sample"):
+        dedup.banded_hamming_pairs(df, "id", "fp", 3, detect_sample=0)
+
+
 def test_minhash_lsh_hot_cluster_salting_exact(spark):
     """r5: a large templated near-dup cluster agrees on all r minima, so
     its docs collapse onto ONE band key — the LSH candidate join's hot
@@ -278,39 +295,80 @@ def test_minhash_lsh_hot_cluster_salting_exact(spark):
 
 
 def test_connected_components_path_graph_crosses_stats_reset(spark):
-    """r5 regression: localCheckpoint CARRIES Catalyst plan stats into the
-    new LogicalRDD leaf, and each round's joins MULTIPLY them — the carried
-    BigInt tripled its bit-length per round until a 32k-image hamming graph
-    pinned the driver for 19 min inside BigInteger.multiplyToomCook3 and
-    then overflowed BigInteger's 2^31-bit ceiling (dedup.py stats-truncation
-    note).  A 4000-node path graph is the worst-case diameter: ~18
-    pointer-jumping rounds, crossing the periodic reliable-spill reset 3×.
-    Without the reset this test burns CPU for hours; with it, seconds."""
+    """localCheckpoint CARRIES Catalyst plan stats into its LogicalRDD leaf.
+    Join-based label propagation multiplied them at every join, tripling
+    the carried sizeInBytes' bit length per round until a 32k-image
+    hamming graph pinned the driver for 19 min inside
+    BigInteger.multiplyToomCook3.  Large-star/small-star carries windows,
+    not joins: on a 4000-node path (the widest diameter) the returned
+    frame's stats stay under 128 bits without any spill."""
     pairs = spark.createDataFrame([(i, i + 1) for i in range(3999)],
                                   "id_a long, id_b long")
-    out = dedup.connected_components(pairs).groupBy("comp").count().collect()
+    comps = dedup.connected_components(pairs)
+    size = int(comps._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert size.bit_length() < 128
+    out = comps.groupBy("comp").count().collect()
     assert len(out) == 1 and out[0].comp == 0 and out[0]["count"] == 4000
 
 
-def test_connected_components_spills_into_checkpoint_dir(spark):
-    """When the session has a checkpoint dir (the cluster deployment), the
-    periodic stats-reset spill must land under it in a per-run unique
-    subdir (concurrent runs must not clobber each other's round files) and
-    be cleaned up once the loop exits.  There is no unset API, so the dir
-    stays for the rest of the session — later CC calls simply keep taking
-    the checkpoint-dir spill path, which is the cluster behavior anyway."""
-    import os
-    import tempfile
+def _union_find_labels(edges):
+    """{node: least node of its component}, pure Python."""
+    parent = {}
 
-    ckpt = tempfile.mkdtemp(prefix="dqc_test_ckpt_")
-    spark.sparkContext.setCheckpointDir(ckpt)
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(999)],
-                                  "id_a long, id_b long")
-    out = dedup.connected_components(pairs).groupBy("comp").count().collect()
-    assert len(out) == 1 and out[0]["count"] == 1000
-    spill_base = os.path.join(ckpt, "dqc_cc_spill")
-    # the uuid run-dir was deleted best-effort after the loop
-    assert (not os.path.exists(spill_base)) or os.listdir(spill_base) == []
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+def _random_path(n, seed):
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+def _random_gnm(n, m, seed):
+    rng = random.Random(seed)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+def _hub_star(leaves, seed):
+    ids = list(range(leaves + 1))
+    random.Random(seed).shuffle(ids)
+    return [(ids[0], x) for x in ids[1:]]
+
+
+@pytest.mark.parametrize("graph", [
+    # ids in random order along a path: min-label propagation with pointer
+    # jumping shortens such a chain hardly at all and ran out of rounds
+    pytest.param(lambda: (_random_path(128, 1), "long"), id="random_path_128"),
+    pytest.param(lambda: (_random_path(4000, 2), "long"), id="random_path_4000"),
+    pytest.param(lambda: (_random_gnm(2000, 3000, 3), "long"), id="gnm_2000_3000"),
+    pytest.param(lambda: ([(f"n{a}", f"n{b}") for a, b in _random_path(300, 4)],
+                          "string"), id="string_ids"),
+    pytest.param(lambda: (_hub_star(20000, 5), "long"), id="hub_star_20000"),
+    # a self-pair is a node of its own; a duplicated and reversed pair is one edge
+    pytest.param(lambda: ([(1, 1), (2, 3), (3, 2), (3, 3), (2, 3), (5, 4)], "long"),
+                 id="loops_and_duplicates"),
+    pytest.param(lambda: ([], "long"), id="empty"),
+])
+def test_connected_components_matches_union_find(spark, graph):
+    edges, id_type = graph()
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    comps = dedup.connected_components(pairs)
+    got = [(r.id, r.comp) for r in comps.collect()]
+    assert len(got) == len({i for i, _ in got})  # one row per node
+    assert dict(got) == _union_find_labels(edges)
+    size = int(comps._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert size.bit_length() < 128
 
 
 def test_blocked_cosine_rejects_string_ids(spark):
@@ -435,9 +493,8 @@ def test_decontamination_flags(spark):
 
 
 def test_connected_components_string_ids(spark):
-    # review r2: string ids are legitimate (least() = lexicographic min) and
-    # must use the type-agnostic convergence check, not the numeric sum
-    # proxy (numeric-string ids are not numerically monotone: '10' < '9')
+    # string ids are legitimate (least() = lexicographic min): numeric-looking
+    # strings order as strings, so '10' < '9' and x10 is the survivor
     pairs = spark.createDataFrame(
         [("m1", "m2"), ("m2", "m3"), ("m3", "m4"), ("x9", "x10")],
         "id_a string, id_b string",

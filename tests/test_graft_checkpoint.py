@@ -186,3 +186,43 @@ def test_bare_relative_path_is_not_a_table_ref(tmp_path, monkeypatch):
     monkeypatch.chdir(tmp_path)
     assert not is_table_ref("corpus")       # existing bare dir = path
     assert is_table_ref("corpus_missing")   # nonexistent bare name = table
+
+
+def _phash_path(n, seed):
+    """n int64 phashes in random numeric order along a path: neighbours
+    differ in exactly 3 bits, every other pair in at least 4."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    while True:
+        v = [int(rng.integers(0, 2**63))]
+        for _ in range(n - 1):
+            flips = rng.choice(64, 3, replace=False)
+            v.append(v[-1] ^ int(sum(1 << int(b) for b in flips)))
+        v = [x - 2**64 if x >= 2**63 else x for x in v]  # as signed int64
+        u = np.array(v, dtype=np.int64).view(np.uint64)
+        ham = np.array([[bin(int(a ^ b)).count("1") for b in u] for a in u])
+        near = np.abs(np.subtract.outer(np.arange(n), np.arange(n))) == 1
+        if (ham[near] == 3).all() and (ham[~near & (ham > 0)] >= 4).all() \
+                and len(set(v)) == n:
+            return v
+
+
+def test_hamming_dedup_index_on_random_order_phash_path(spark, tmp_path):
+    """A near-dup chain whose phash values fall in random order along it is
+    ONE duplicate group with the least image_id as keeper.  Min-label
+    propagation with pointer jumping ran out of rounds on this input."""
+    import random
+
+    phashes = _phash_path(128, 7)
+    image_ids = [f"img-{i:04d}" for i in range(128)]
+    random.Random(7).shuffle(image_ids)
+    in_path = str(tmp_path / "input")
+    spark.createDataFrame(
+        list(zip(image_ids, phashes)), "image_id string, phash long"
+    ).write.parquet(in_path)
+    idx = checkpoint.ensure_dedup_index(
+        spark, in_path, str(tmp_path / "out"), KeepDropConfig(dedupe_hamming=3))
+    groups = {(r.keeper_id, r.n_members) for r in idx.collect()}
+    assert groups == {("img-0000", 128)}
+    assert idx.count() == 128
