@@ -2,7 +2,8 @@
 "execution is checkpoint-resumable per Iceberg partition ... with
 per-partition lineage + metrics").
 
-Driver-side loop over the input table's partitions.  The input may be a
+The driver runs the input table's pending partitions concurrently, each as
+its own small Spark job, from a bounded thread pool.  The input may be a
 parquet directory (the sandbox stand-in, partitioned by ``part``) or a
 catalog (Iceberg) table ref — see ``graft/io.py``; on a real cluster the
 partition list comes from Iceberg snapshot metadata, not a data scan:
@@ -16,9 +17,17 @@ partition list comes from Iceberg snapshot metadata, not a data scan:
   marker ``_manifest/part-N.json`` (partition, rows in/kept/dropped, scrub
   counts, drop-reason counts, wall seconds).  The lineage row comes from an
   ``Observation`` on the write itself (``pipeline.lineage_columns``), so it
-  costs no job of its own.  The marker is written only AFTER the
-  partition's output commits, so a crash mid-partition re-runs exactly
+  costs no job of its own.  Each partition's marker is written only AFTER
+  that partition's output commits, so a crash mid-partition re-runs exactly
   that partition on resume.
+* **concurrency** — one partition job has about one task per input file,
+  so one job at a time leaves most executor cores idle.  Up to
+  ``min(pending, defaultParallelism, _MAX_CONCURRENT_PARTITIONS)``
+  partitions run at once; each worker thread inherits the caller's job
+  group and local properties.  A failing partition does not stop the
+  others: every pending partition runs to its own commit or failure, and
+  the first failure (in partition order) is raised after all have finished,
+  so a resume re-runs only the failed partitions.
 
 The manifest lives NEXT TO the output and is accessed through the Hadoop
 FileSystem API (``graft/io.py``), so ``out_path`` may be ``file:``,
@@ -33,8 +42,10 @@ from __future__ import annotations
 import json
 import logging
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from dataqualitycontroltool_spark.graft import io as gio
 from dataqualitycontroltool_spark.graft.io import corpus_partitions, read_corpus
@@ -49,6 +60,10 @@ logger = logging.getLogger(__name__)
 
 MANIFEST_DIR = "_manifest"
 DEDUP_DIR = "_dedup_index"
+# On a cluster defaultParallelism is the total executor core count, which
+# can be thousands; this caps how many partition queries the driver plans
+# and tracks at once.
+_MAX_CONCURRENT_PARTITIONS = 8
 
 
 def _join(base: str, *parts: str) -> str:
@@ -97,6 +112,13 @@ def ensure_dedup_index(
     return spark.read.parquet(idx_path)
 
 
+def _pool_size(n_pending: int, default_parallelism: int) -> int:
+    """Worker threads for ``n_pending`` partitions; 0 means run inline."""
+    if n_pending < 2:
+        return 0
+    return min(n_pending, default_parallelism, _MAX_CONCURRENT_PARTITIONS)
+
+
 def run_resumable(
     spark: SparkSession,
     in_path: str,
@@ -105,7 +127,13 @@ def run_resumable(
     max_partitions: int | None = None,
 ) -> list[dict]:
     """Process every not-yet-done partition; return the lineage rows written
-    THIS call.  ``max_partitions`` lets tests simulate a mid-run crash."""
+    THIS call, in partition order.  ``max_partitions`` takes only the first N
+    pending partitions (tests use it to simulate a mid-run crash).
+
+    Pending partitions run concurrently (see the module docstring).  Each
+    partition's marker is committed after that partition's output, and a
+    failing partition never stops another's write or marker: all run, then
+    the first failure in partition order is raised."""
     cfg = cfg or KeepDropConfig()
     done = read_manifest(out_path, spark)
     idx = ensure_dedup_index(spark, in_path, out_path, cfg)
@@ -117,8 +145,8 @@ def run_resumable(
         pending = pending[:max_partitions]
 
     corpus = read_corpus(spark, in_path)
-    written: list[dict] = []
-    for part in pending:
+
+    def write_partition(part: int) -> dict:
         t0 = time.perf_counter()
         result = run_pipeline(corpus.where(F.col("part") == part), cfg, dedup=idx)
         # observe() is the last operator before the sink, so the lineage row
@@ -133,8 +161,25 @@ def run_resumable(
         row = {"part": int(part), **obs.get,
                "wall_s": round(time.perf_counter() - t0, 3)}
         _commit_manifest(spark, out_path, row)
-        written.append(row)
-    return written
+        return row
+
+    workers = _pool_size(len(pending), spark.sparkContext.defaultParallelism)
+    if not workers:
+        return [write_partition(part) for part in pending]
+    # each submission is wrapped on this thread, so every worker gets its
+    # own copy of the caller's local properties (job group, description)
+    with ThreadPoolExecutor(workers, thread_name_prefix="run_resumable") as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write_partition), part)
+            for part in pending
+        ]
+    failed = [(part, f.exception()) for part, f in zip(pending, futures)
+              if f.exception() is not None]
+    for part, exc in failed[1:]:  # only the first failure is raised
+        logger.error("partition %s also failed", part, exc_info=exc)
+    if failed:
+        raise failed[0][1]
+    return [f.result() for f in futures]
 
 
 def read_output(spark: SparkSession, out_path: str) -> DataFrame:

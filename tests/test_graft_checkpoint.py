@@ -84,7 +84,9 @@ def test_manifest_drop_reasons_match_histogram(spark, paths):
 def test_jobs_per_partition(spark, paths, tmp_path):
     """Lineage rides on the partition write: beyond the per-call setup
     (dedup index, partition list, one corpus read) each partition costs at
-    most its dedup broadcast and its write — no read-back, no re-aggregate."""
+    most its dedup broadcast and its write — no read-back, no re-aggregate.
+    The partitions run on pool threads, which must inherit the caller's job
+    group: each extra partition adds at least its write job to the group."""
     in_path, _, _ = paths
     sc = spark.sparkContext
 
@@ -101,6 +103,70 @@ def test_jobs_per_partition(spark, paths, tmp_path):
     every = jobs("jobs-all-parts")
     assert every - one <= 2 * (N_PARTS - 1), (one, every)
     assert every <= 20, every
+    assert every >= one + (N_PARTS - 1), (one, every)
+
+
+def test_pool_size():
+    """Pool sizing is pure: fewer than two pending partitions run inline,
+    otherwise the pool is bounded by the cluster's parallelism and by a
+    fixed cap however many cores or partitions there are."""
+    cap = checkpoint._MAX_CONCURRENT_PARTITIONS
+    assert 2 <= cap <= 16
+    for cores in (2, 4_000):
+        assert checkpoint._pool_size(0, cores) == 0
+        assert checkpoint._pool_size(1, cores) == 0
+    assert checkpoint._pool_size(3, 2) == 2
+    assert checkpoint._pool_size(10_000, 2) == 2
+    assert checkpoint._pool_size(3, 4_000) == 3
+    assert checkpoint._pool_size(10_000, 4_000) == cap
+    assert checkpoint._pool_size(5, 1) == 1
+
+
+def test_failed_partition_does_not_stop_the_others(spark, paths, tmp_path, monkeypatch):
+    """One partition raising must not cost the others their output or
+    marker: all pending partitions run, the failure is raised after they
+    finish, and the next call re-runs only the failed partition (inline,
+    since it is the only one pending)."""
+    in_path, _, _ = paths
+    out_dir = tmp_path / "out"
+    out = str(out_dir)
+    real = checkpoint.run_pipeline
+
+    def failing_part_2(df, *args, **kw):
+        if [r.part for r in df.select("part").distinct().collect()] == [2]:
+            raise RuntimeError("injected failure in part 2")
+        return real(df, *args, **kw)
+
+    monkeypatch.setattr(checkpoint, "run_pipeline", failing_part_2)
+    with pytest.raises(RuntimeError, match="injected failure in part 2"):
+        checkpoint.run_resumable(spark, in_path, out, KeepDropConfig())
+
+    manifest = checkpoint.read_manifest(out, spark)
+    assert sorted(manifest) == [0, 1, 3]
+    per_part = {r.part: r["count"] for r in
+                spark.read.parquet(in_path).groupBy("part").count().collect()}
+    for part, row in manifest.items():
+        assert row["rows_in"] == per_part[part]
+        assert (out_dir / f"part={part}" / "_SUCCESS").exists()
+        assert spark.read.parquet(str(out_dir / f"part={part}")).count() == row["rows_in"]
+
+    monkeypatch.setattr(checkpoint, "run_pipeline", real)
+
+    def no_pool(*args, **kw):
+        raise AssertionError("a single pending partition runs inline")
+
+    monkeypatch.setattr(checkpoint, "ThreadPoolExecutor", no_pool)
+    redo = checkpoint.run_resumable(spark, in_path, out, KeepDropConfig())
+    assert [r["part"] for r in redo] == [2]
+    assert sorted(checkpoint.read_manifest(out, spark)) == list(range(N_PARTS))
+
+    got = (checkpoint.read_output(spark, out)
+           .select("image_id", "keep", "drop_reason", "caption_scrubbed")
+           .toPandas().sort_values("image_id").reset_index(drop=True))
+    oneshot = (run_pipeline(spark.read.parquet(in_path), KeepDropConfig())
+               .select("image_id", "keep", "drop_reason", "caption_scrubbed")
+               .toPandas().sort_values("image_id").reset_index(drop=True))
+    pd.testing.assert_frame_equal(got, oneshot)
 
 
 def test_catalog_table_ref_input(spark, paths, tmp_path):
