@@ -23,11 +23,12 @@ partition list comes from Iceberg snapshot metadata, not a data scan:
 * **concurrency** — one partition job has about one task per input file,
   so one job at a time leaves most executor cores idle.  Up to
   ``min(pending, defaultParallelism, _MAX_CONCURRENT_PARTITIONS)``
-  partitions run at once; each worker thread inherits the caller's job
-  group and local properties.  A failing partition does not stop the
-  others: every pending partition runs to its own commit or failure, and
-  the first failure (in partition order) is raised after all have finished,
-  so a resume re-runs only the failed partitions.
+  partitions run at once; in pinned-thread mode (PySpark's default) each
+  worker thread inherits the caller's job group and local properties.  A
+  failing partition does not stop the others: every pending partition runs
+  to its own commit or failure, and the first failure (in partition order)
+  is raised after all have finished, so a resume re-runs only the failed
+  partitions.
 
 The manifest lives NEXT TO the output and is accessed through the Hadoop
 FileSystem API (``graft/io.py``), so ``out_path`` may be ``file:``,
@@ -42,6 +43,7 @@ from __future__ import annotations
 import json
 import logging
 import time
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -113,10 +115,18 @@ def ensure_dedup_index(
 
 
 def _pool_size(n_pending: int, default_parallelism: int) -> int:
-    """Worker threads for ``n_pending`` partitions; 0 means run inline."""
-    if n_pending < 2:
-        return 0
+    """Worker threads for ``n_pending`` (at least one) partitions."""
     return min(n_pending, default_parallelism, _MAX_CONCURRENT_PARTITIONS)
+
+
+def _inherit_local_properties(fn):
+    """``fn`` wrapped to run with a copy, taken now, of this thread's Spark
+    local properties (job group, description); ``fn`` itself when PySpark
+    is not in pinned-thread mode, where JVM threads are not per Python
+    thread.  No session tags are used, so the session form is not needed."""
+    with warnings.catch_warnings():
+        warnings.filterwarnings("ignore", "Spark session is not provided")
+        return inheritable_thread_target(fn)
 
 
 def run_resumable(
@@ -163,14 +173,15 @@ def run_resumable(
         _commit_manifest(spark, out_path, row)
         return row
 
+    if not pending:
+        return []
     workers = _pool_size(len(pending), spark.sparkContext.defaultParallelism)
-    if not workers:
-        return [write_partition(part) for part in pending]
-    # each submission is wrapped on this thread, so every worker gets its
-    # own copy of the caller's local properties (job group, description)
+    # each submission is wrapped on this thread, so every partition runs
+    # with its own copy of the caller's local properties: Spark sets the
+    # SQL execution id in them, so the copies must not be shared
     with ThreadPoolExecutor(workers, thread_name_prefix="run_resumable") as pool:
         futures = [
-            pool.submit(inheritable_thread_target(spark)(write_partition), part)
+            pool.submit(_inherit_local_properties(write_partition), part)
             for part in pending
         ]
     failed = [(part, f.exception()) for part, f in zip(pending, futures)

@@ -54,14 +54,6 @@ class TrigramModel:
             for idx, c in row.items():
                 mat[li, idx] += c
         self.logp = np.log(mat / mat.sum(axis=1, keepdims=True))
-        # batch scoring: vocab trigrams as sorted uint64 codes (three 21-bit
-        # code points) for searchsorted, and a zero column after OOV that
-        # masks the windows spanning two captions
-        codes = _trigram_codes(
-            np.frombuffer("".join(vocab).encode("utf-32-le"), dtype=np.uint32))[::3]
-        order = np.argsort(codes)
-        self._codes, self._code_idx = codes[order], np.arange(v)[order]
-        self._logp_masked = np.hstack([self.logp, np.zeros((len(self.langs), 1))])
 
     def _tri_indices(self, s: str) -> np.ndarray:
         t = f"  {s.lower()}  "
@@ -83,37 +75,7 @@ class TrigramModel:
         return self.langs[best]
 
     def predict_batch(self, series: pd.Series) -> pd.Series:
-        """``predict`` over a whole batch in one numpy pass: the padded
-        captions are concatenated, every trigram window is looked up in the
-        sorted vocab codes and each caption's log-probs are summed with
-        ``reduceat``."""
-        out = np.full(len(series), UNKNOWN, dtype=object)
-        texts = [(i, f"  {s.lower()}  ") for i, s in enumerate(series)
-                 if isinstance(s, str) and s.strip()]  # None/NaN/blank → und
-        if not texts:
-            return pd.Series(out, index=series.index)
-        rows = np.array([i for i, _ in texts])
-        lens = np.array([len(t) for _, t in texts])
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        codes = _trigram_codes(np.frombuffer(
-            "".join(t for _, t in texts).encode("utf-32-le"), dtype=np.uint32))
-        pos = np.minimum(np.searchsorted(self._codes, codes), len(self._codes) - 1)
-        oov = len(self.vocab)
-        idx = np.where(self._codes[pos] == codes, self._code_idx[pos], oov)
-        # the last two windows of each caption run into the next one
-        idx[np.concatenate([starts[1:] - 2, starts[1:] - 1])] = oov + 1
-        scores = np.add.reduceat(self._logp_masked[:, idx], starts, axis=1)
-        best = scores.argmax(axis=0)
-        avg = scores[best, np.arange(len(texts))] / (lens - 2)
-        out[rows] = np.where(avg < MIN_AVG_LOGPROB, UNKNOWN,
-                             np.array(self.langs, dtype=object)[best])
-        return pd.Series(out, index=series.index)
-
-
-def _trigram_codes(cps: np.ndarray) -> np.ndarray:
-    """uint64 code of every trigram window of a code-point array."""
-    c = cps.astype(np.uint64)
-    return (c[:-2] << np.uint64(42)) | (c[1:-1] << np.uint64(21)) | c[2:]
+        return series.map(self.predict)
 
 
 _MODEL: TrigramModel | None = None

@@ -37,22 +37,7 @@ class BigramLM:
         return float(np.exp(-self.logp[prev, arr].mean()))
 
     def batch(self, series: pd.Series) -> pd.Series:
-        """``perplexity`` over a whole batch in one numpy pass over the
-        concatenated UTF-8 bytes, with a per-caption mean by ``reduceat``."""
-        out = np.full(len(series), np.inf)
-        texts = [(i, s.lower().encode("utf-8")) for i, s in enumerate(series)
-                 if isinstance(s, str) and s]  # None/NaN/empty → inf
-        if not texts:
-            return pd.Series(out, index=series.index)
-        rows = np.array([i for i, _ in texts])
-        lens = np.array([len(b) for _, b in texts])
-        starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-        arr = np.frombuffer(b"".join(b for _, b in texts), dtype=np.uint8).astype(np.int64)
-        prev = np.concatenate([[BOS], arr[:-1]])
-        prev[starts] = BOS
-        mean = np.add.reduceat(self.logp[prev, arr], starts) / lens
-        out[rows] = np.exp(-mean)
-        return pd.Series(out, index=series.index)
+        return series.map(self.perplexity).astype("float64")
 
 
 _LM: BigramLM | None = None

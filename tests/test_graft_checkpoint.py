@@ -107,14 +107,13 @@ def test_jobs_per_partition(spark, paths, tmp_path):
 
 
 def test_pool_size():
-    """Pool sizing is pure: fewer than two pending partitions run inline,
-    otherwise the pool is bounded by the cluster's parallelism and by a
-    fixed cap however many cores or partitions there are."""
+    """Pool sizing is pure: bounded by the pending partitions, by the
+    cluster's parallelism and by a fixed cap however many cores or
+    partitions there are."""
     cap = checkpoint._MAX_CONCURRENT_PARTITIONS
     assert 2 <= cap <= 16
-    for cores in (2, 4_000):
-        assert checkpoint._pool_size(0, cores) == 0
-        assert checkpoint._pool_size(1, cores) == 0
+    assert checkpoint._pool_size(1, 2) == 1
+    assert checkpoint._pool_size(1, 4_000) == 1
     assert checkpoint._pool_size(3, 2) == 2
     assert checkpoint._pool_size(10_000, 2) == 2
     assert checkpoint._pool_size(3, 4_000) == 3
@@ -122,11 +121,44 @@ def test_pool_size():
     assert checkpoint._pool_size(5, 1) == 1
 
 
+def test_unpinned_thread_mode(spark, paths, tmp_path, monkeypatch):
+    """Outside pinned-thread mode (``PYSPARK_PIN_THREAD=false``, gateway not
+    a py4j ``ClientServer``) PySpark has no per-thread local properties to
+    copy: the partition body runs unwrapped and several partitions still
+    complete.  In pinned mode the wrapper is silent (no tags warning)."""
+    import warnings
+
+    from pyspark import SparkContext
+
+    in_path, _, _ = paths
+
+    def body():
+        return None
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert checkpoint._inherit_local_properties(body) is not body
+
+    class NotClientServer:
+        def __init__(self, gateway):
+            self._gateway = gateway
+
+        def __getattr__(self, name):
+            return getattr(self._gateway, name)
+
+    monkeypatch.setattr(SparkContext, "_gateway", NotClientServer(SparkContext._gateway))
+    assert checkpoint._inherit_local_properties(body) is body
+    out = str(tmp_path / "out")
+    rows = checkpoint.run_resumable(spark, in_path, out, KeepDropConfig(),
+                                    max_partitions=2)
+    assert [r["part"] for r in rows] == [0, 1]
+    assert sorted(checkpoint.read_manifest(out, spark)) == [0, 1]
+
+
 def test_failed_partition_does_not_stop_the_others(spark, paths, tmp_path, monkeypatch):
     """One partition raising must not cost the others their output or
     marker: all pending partitions run, the failure is raised after they
-    finish, and the next call re-runs only the failed partition (inline,
-    since it is the only one pending)."""
+    finish, and the next call re-runs only the failed partition."""
     in_path, _, _ = paths
     out_dir = tmp_path / "out"
     out = str(out_dir)
@@ -151,11 +183,6 @@ def test_failed_partition_does_not_stop_the_others(spark, paths, tmp_path, monke
         assert spark.read.parquet(str(out_dir / f"part={part}")).count() == row["rows_in"]
 
     monkeypatch.setattr(checkpoint, "run_pipeline", real)
-
-    def no_pool(*args, **kw):
-        raise AssertionError("a single pending partition runs inline")
-
-    monkeypatch.setattr(checkpoint, "ThreadPoolExecutor", no_pool)
     redo = checkpoint.run_resumable(spark, in_path, out, KeepDropConfig())
     assert [r["part"] for r in redo] == [2]
     assert sorted(checkpoint.read_manifest(out, spark)) == list(range(N_PARTS))

@@ -169,47 +169,3 @@ def test_real_lossy_bitstream_error_paths():
         with pytest.raises(ValueError, match="no codec library"):
             codecs.decode(real_webp, "webp")
     assert dec.check_bytes(real_webp, "webp")[0] is False
-
-
-def _caption_kinds() -> pd.Series:
-    """Every caption kind the generator makes (missing, gibberish, each
-    language incl. the disallowed one, PII and toxic suffixes), plus
-    non-ASCII, astral-plane and blank text."""
-    rng = np.random.default_rng(9)
-    caps = [c for part in range(2)
-            for c in synth.generate_pdf(part, 400, seed=9)["caption"]]
-    caps += [synth._caption(rng, lang, int(n))
-             for lang in synth.WORDS for n in rng.integers(1, 18, size=20)]
-    caps += [synth._gibberish(rng, int(n)) for n in rng.integers(1, 14, size=20)]
-    caps += [f"{synth._caption(rng, 'en', 8)} contact {pii}"
-             for pii in synth.PII_EMAILS + synth.PII_PHONES + synth.PII_URLS
-             + synth.PII_SSNS + synth.PII_IPS]
-    caps += [f"{synth._caption(rng, 'de', 6)} {tox} ending" for tox in synth.TOXIC_WORDS]
-    caps += [None, float("nan"), "", " ", "\t\n ", "a", "ab", "abc",
-             "Straße über Café déjà vu", "İSTANBUL ΣΟΦΊΑ", "日本語のキャプション",
-             "emoji 😀🎉 and 𝔘𝔫𝔦𝔠𝔬𝔡𝔢", "𝔘", "  spaced   out  "]
-    return pd.Series(caps, dtype=object)
-
-
-def test_batch_scoring_matches_per_row():
-    """The vectorised UDF bodies equal the per-row reference scorers:
-    labels exactly, perplexity within 1e-12 relative (summation order)."""
-    caps = _caption_kinds()
-    m, lm = get_model(), get_lm()
-
-    labels = m.predict_batch(caps)
-    assert labels.index.equals(caps.index)
-    assert labels.tolist() == [m.predict(c) for c in caps]
-    assert {"und", "it", "en"} <= set(labels)
-
-    ppl = lm.batch(caps)
-    ref = np.array([lm.perplexity(c) for c in caps])
-    assert ppl.dtype == np.float64 and ppl.index.equals(caps.index)
-    assert (np.isinf(ppl.to_numpy()) == np.isinf(ref)).all()
-    fin = np.isfinite(ref)
-    np.testing.assert_allclose(ppl.to_numpy()[fin], ref[fin], rtol=1e-12, atol=0)
-
-    for batch in ([None, ""], ["der hund"], [None, "le chat", " "]):
-        batch = pd.Series(batch, dtype=object)
-        assert m.predict_batch(batch).tolist() == [m.predict(c) for c in batch]
-        assert lm.batch(batch).tolist() == [lm.perplexity(c) for c in batch]
