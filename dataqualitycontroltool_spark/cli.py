@@ -53,9 +53,12 @@ def cmd_validate(args) -> int:
         desc = frictionless_from_dc(desc)
     spec = TableSpec.from_descriptor(desc)
     df = _load_data(spark, args.data)
-    # ONE validation pass shared by the parquet tables and every rendered
-    # format (report_tables caches the validated frame; this command owns
-    # that cache and releases it at the end)
+    # ONE validation pass: report_tables caches the validated frame, and
+    # the profiles (write_report), the corrected CSV and every rendered
+    # format read that one cached frame, so the date-suggestion UDF runs
+    # once.  This command owns the cache and clears it at the end.  The
+    # sinks run a fixed job count (19 for a 6-field table at local[2]),
+    # whatever the number of fields of a MIPType.
     tables = reports.report_tables(df, spec)
     reports.write_report(df, spec, args.outdir, threshold=args.outlier,
                          tables=tables)

@@ -18,7 +18,9 @@ Parity decisions (SURVEY §7):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+import json
+
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 _STAT_DECIMALS = 6  # round float aggregates so Spark/DuckDB ulp noise cancels
 
@@ -190,24 +192,201 @@ def rows_per_valid_count(validated_with_flags: DataFrame, col: str = "n_valid") 
     return validated_with_flags.groupBy(col).agg(F.count(F.lit(1)).alias("n_rows"))
 
 
+# valid-percentage bands of A9, highest first: (lower bound %, label)
+_PCT_BANDS = ((100.0, "100%"), (75.0, "75-99%"), (50.0, "50-74%"), (25.0, "25-49%"))
+_LOWEST_BAND = "0-24%"
+
+
+def valid_pct_band(count: int, total_cols: int) -> str:
+    """The A9 band of one row's count — the driver-side twin of
+    :func:`quantile_bucket_stats`, for a count histogram already
+    collected."""
+    pct = count * 100.0 / total_cols
+    return next((label for lo, label in _PCT_BANDS if pct >= lo), _LOWEST_BAND)
+
+
 def quantile_bucket_stats(
     flags: DataFrame, count_col: str, total_cols: int
 ) -> DataFrame:
     """A9 (tablereport.py:387-440): bucket rows into 0-24 / 25-49 / 50-74 /
     75-99 / 100 % filled-or-valid bands and count rows per band."""
     pct = F.col(count_col) * 100.0 / F.lit(total_cols)
-    bucket = (
-        F.when(pct >= 100.0, "100%")
-        .when(pct >= 75.0, "75-99%")
-        .when(pct >= 50.0, "50-74%")
-        .when(pct >= 25.0, "25-49%")
-        .otherwise("0-24%")
-    )
+    bucket = F
+    for lo, label in _PCT_BANDS:
+        bucket = bucket.when(pct >= lo, label)
     return (
-        flags.select(bucket.alias("bucket"))
+        flags.select(bucket.otherwise(_LOWEST_BAND).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_rows"))
     )
+
+
+def literal_frame(spark, schema: str, rows: list[tuple]) -> DataFrame:
+    """A frame of driver-side ``rows`` under the DDL ``schema``, built in
+    the JVM from ONE JSON literal: a handful of py4j calls whatever its
+    size, exact for every value (doubles travel as their shortest repr),
+    and writing it runs no Python worker — unlike a ``createDataFrame``
+    list frame, whose write starts one per task."""
+    struct = T.StructType.fromDDL(schema)
+    data = json.dumps([dict(zip(struct.names, row)) for row in rows], default=str)
+    return spark.range(0, 1, 1, 1).select(F.inline(F.from_json(
+        F.lit(data), T.ArrayType(struct), {"mode": "FAILFAST"})))
+
+
+# column layout of each MIPType's profile; ``{t}`` is the type of the
+# field's cast column (the type its direct ``profile_<miptype>`` returns)
+_PROFILE_SCHEMAS = {
+    "numerical": "mean double, std double, min {t}, max {t}, q1 double, "
+                 "median double, q3 double, upperbound double, "
+                 "lowerbound double, outliers bigint",
+    "integer": "mode {t}, freq bigint, min {t}, max {t}, q1 bigint, "
+               "median bigint, q3 bigint",
+    "date": "mode {t}, freq bigint, min {t}, max {t}",
+    "nominal": "top {t}, freq bigint, categories string, categories_num bigint",
+    "text": "unique bigint, top {t}, freq bigint, top5 string, bottom5 string",
+}
+
+
+def profile_table_rows(
+    df: DataFrame, spec, threshold: float = 3.0, exact: bool = True,
+    cache: bool = True,
+) -> dict[str, tuple[str, list[tuple]]]:
+    """{field_name: (schema DDL, rows)} — the computed profiles behind
+    :func:`profile_table`, as driver-side rows (at most one per field).
+
+    Runs eagerly, in two queries whatever the number of fields:
+
+    * ONE wide aggregate for every agg-able scalar: numerical mean/std/
+      min/max/rounded quartiles/outlier bounds, integer min/max/
+      quartiles, date min/max, nominal sorted categories;
+    * ONE distribution query: every cast-valid integer/date/nominal/text
+      cell is stacked as (field, typed value) — and every numerical cell
+      as (field, outside the collected bounds?) — counted by ONE
+      ``groupBy``, ranked per field by window; only rank <= 5 rows are
+      collected, so driver memory is O(fields).  Each stacked value keeps
+      a column of its own type, so ties break on the smallest TYPED value
+      (9 before 10), like the direct profilers.
+
+    At ``local[2]`` over a one-partition input that is 5 jobs.
+    ``exact="distributed"`` adds its own per-field rank-selection jobs
+    (the 10^12-row-safe quartiles)."""
+    from dataqualitycontroltool_spark.plans.compiler import ValidationPlan
+
+    present = [f for f in spec.fields if f.name in df.columns]
+    validated = ValidationPlan(spec).apply(df)
+    if cache:
+        validated = validated.cache()
+    dtypes = dict(validated.dtypes)
+    d = _STAT_DECIMALS
+
+    def cast(f):
+        return F.col(f"{f.name}__cast")
+
+    # ---- one wide aggregate for everything agg-able --------------------
+    aggs = []
+    for i, f in enumerate(present):
+        c = cast(f)
+        if f.miptype == "numerical":
+            q = _quartiles_col(validated, f"{f.name}__cast", exact)
+            # rounded INSIDE the plan (F.round = HALF_UP on the shortest
+            # decimal repr — Python round() is half-even on the binary
+            # double and diverges on ~5% of 7-decimal values)
+            aggs += [
+                F.round(F.mean(c), d).alias(f"{i}_mean"),
+                F.round(F.stddev_samp(c), d).alias(f"{i}_std"),
+                *[F.round(q[k], d).alias(f"{i}_q{k}") for k in range(3)],
+                F.round(F.mean(c) + threshold * F.stddev_samp(c), d).alias(f"{i}_ub"),
+                F.round(F.mean(c) - threshold * F.stddev_samp(c), d).alias(f"{i}_lb"),
+            ]
+        if f.miptype == "integer":
+            aggs.append(_quartiles_col(validated, f"{f.name}__cast", exact).alias(f"{i}_q"))
+        if f.miptype in ("numerical", "integer", "date"):
+            aggs += [F.min(c).alias(f"{i}_min"), F.max(c).alias(f"{i}_max")]
+        if f.miptype == "nominal":
+            aggs.append(
+                F.array_join(F.array_sort(F.collect_set(c)), ",").alias(f"{i}_categories")
+            )
+    stats: dict[int, dict] = {i: {} for i in range(len(present))}
+    for key, v in (validated.agg(*aggs).first().asDict() if aggs else {}).items():
+        i, name = key.split("_", 1)
+        stats[int(i)][name] = v
+
+    # ---- one stacked groupBy: modes, top/bottom-5, distinct and outlier
+    # counts -------------------------------------------------------------
+    stacked: dict[int, tuple] = {}  # field index -> (stacked value, its type)
+    for i, f in enumerate(present):
+        ub, lb = stats[i].get("ub"), stats[i].get("lb")
+        if f.miptype != "numerical":
+            stacked[i] = (cast(f), dtypes[f"{f.name}__cast"])
+        elif ub is not None and lb is not None:
+            outside = (cast(f) >= F.lit(float(ub))) | (cast(f) <= F.lit(float(lb)))
+            stacked[i] = (outside, "boolean")
+    top: dict[int, list] = {i: [] for i in stacked}
+    bottom: dict[int, list] = {i: [] for i in stacked}
+    ndistinct: dict[int, int] = {}
+    if stacked:
+        slots = sorted({t for _, t in stacked.values()})
+        cells = F.array_compact(F.array(*[
+            F.when(cast(present[i]).isNotNull(), F.struct(
+                F.lit(i).alias("fid"),
+                *[(v if t == vtype else F.lit(None).cast(t)).alias(f"v{k}")
+                  for k, t in enumerate(slots)],
+            ))
+            for i, (v, vtype) in stacked.items()
+        ]))
+        values = [f"v{k}" for k in range(len(slots))]
+        counts = (
+            validated.select(F.inline(cells))
+            .groupBy("fid", *values)
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        by = Window.partitionBy("fid")
+        asc = [F.col(v).asc() for v in values]
+        ranked = counts.select(
+            "*",
+            F.row_number().over(by.orderBy(F.col("n").desc(), *asc)).alias("r_top"),
+            F.row_number().over(by.orderBy(F.col("n").asc(), *asc)).alias("r_bottom"),
+            F.count(F.lit(1)).over(by).alias("ndistinct"),
+        )
+        for r in ranked.where((F.col("r_top") <= 5) | (F.col("r_bottom") <= 5)).collect():
+            v = (r[f"v{slots.index(stacked[r.fid][1])}"], r.n)
+            if r.r_top <= 5:
+                top[r.fid].append((r.r_top, v))
+            if r.r_bottom <= 5:
+                bottom[r.fid].append((r.r_bottom, v))
+            ndistinct[r.fid] = r.ndistinct
+        for ranks in (top, bottom):
+            for i in ranks:
+                ranks[i] = [v for _, v in sorted(ranks[i])]
+
+    # ---- assemble: one row per field (none when a mode-bearing field has
+    # no valid value, as the direct profilers' mode join gives) ----------
+    def joined(vals):
+        return ",".join(str(v) for v, _ in vals)
+
+    out = {}
+    for i, f in enumerate(present):
+        w = stats[i]
+        schema = _PROFILE_SCHEMAS[f.miptype].format(t=dtypes[f"{f.name}__cast"])
+        if f.miptype == "numerical":
+            outliers = sum(n for flag, n in top.get(i, []) if flag)
+            rows = [(w["mean"], w["std"], w["min"], w["max"], w["q0"], w["q1"], w["q2"],
+                     w["ub"], w["lb"], outliers)]
+        elif not top.get(i):
+            rows = []
+        else:
+            mode, freq = top[i][0]
+            if f.miptype == "integer":
+                qi = [None if q is None else int(q) for q in (w["q"] or [None] * 3)]
+                rows = [(mode, freq, w["min"], w["max"], *qi)]
+            elif f.miptype == "date":
+                rows = [(mode, freq, w["min"], w["max"])]
+            elif f.miptype == "nominal":
+                rows = [(mode, freq, w["categories"], ndistinct[i])]
+            else:  # text
+                rows = [(ndistinct[i], mode, freq, joined(top[i]), joined(bottom[i]))]
+        out[f.name] = (schema, rows)
+    return out
 
 
 def profile_table(
@@ -219,213 +398,34 @@ def profile_table(
     (``controller/columnreport.py:439-464``: validate → cast valid pairs →
     ``profile_<miptype>``), but from ONE validation pass instead of a
     re-scan per column (the reference's O(cols × file) anti-pattern,
-    SURVEY §4.1).
+    SURVEY §4.1).  Each frame has the rows and columns of the field's
+    direct ``profile_<miptype>`` over its cast-valid values.
 
-    FUSED (VERDICT r3 #5): every agg-able statistic — numerical mean/std/
-    min/max/quartiles/outlier bounds, integer min/max/quartiles, date
-    min/max, nominal sorted-categories + distinct count, text distinct
-    count — is computed in ONE wide ``agg()`` over the validated frame
-    (each aggregate skips NULLs, which is exactly the cast-valid filter),
-    plus ONE second wide pass for the numerical outlier counts against the
-    collected bounds.  Only the inherently per-value-distribution pieces —
-    mode and the text top-5/bottom-5 — remain one aggregate job per field.
-    The wide rows (O(fields) scalars) fold back into the returned per-field
-    frames as literals, so collecting a numerical profile afterwards costs
-    nothing and the whole table profiles in 2 scans + one cheap
-    groupBy-count per mode-bearing field, instead of ~4 scans PER FIELD.
+    The statistics are computed at call time by
+    :func:`profile_table_rows` in two queries whatever the number of
+    fields (a wide aggregate, then one stacked distribution query);
+    each returned frame is a literal frame of at most one row, so
+    collecting or writing it is one job that never rescans the source.
 
-    With ``cache=True`` (default) the validated frame is persisted across
-    those scans; the CALLER owns the cache lifecycle (unpersist /
-    ``spark.catalog.clearCache()`` / session teardown — same contract as
-    ``dedup.simhash_pairs``).  ``cache=False`` now costs only the constant
-    scan count above — viable as the common path at corpus scale.
+    The validated frame is ``ValidationPlan(spec).apply(df)`` with every
+    derivation — the same plan ``report_tables`` and
+    ``write_corrected_csv`` build — so when ``report_tables`` has cached
+    it, these scans read that one cached frame.  With ``cache=True``
+    (default) this call caches it (a no-op when it already is); the
+    CALLER owns the cache lifecycle (``spark.catalog.clearCache()`` at the
+    end of the CLI's ``validate``, or unpersist / session teardown — same
+    contract as ``dedup.simhash_pairs``).  ``cache=False`` leaves no
+    persistent RDD behind.
 
     Spec fields absent from the table are skipped (no profile entry) —
     same header-intersection tolerance as ``report_tables``; the missing
     set is the report's job to surface, not an AnalysisException here."""
-    from dataqualitycontroltool_spark.plans.compiler import ValidationPlan
-
-    present = [f for f in spec.fields if f.name in df.columns]
-    validated = ValidationPlan(spec).apply(df, derive=("cast",))
-    if cache:
-        validated = validated.cache()
-    spark = df.sparkSession
-    d = _STAT_DECIMALS
-
-    # ---- pass A: one wide aggregate for everything agg-able ------------
-    num_fields = [f.name for f in present if f.miptype == "numerical"]
-    aggs = []
-    for f in present:
-        c = F.col(f"{f.name}__cast")
-        n = f.name
-        if f.miptype == "numerical":
-            aggs += [
-                F.round(F.mean(c), d).alias(f"{n}__mean"),
-                F.round(F.stddev_samp(c), d).alias(f"{n}__std"),
-                F.min(c).alias(f"{n}__min"),
-                F.max(c).alias(f"{n}__max"),
-                F.round(
-                    F.mean(c) + threshold * F.stddev_samp(c), d
-                ).alias(f"{n}__ub"),
-                F.round(
-                    F.mean(c) - threshold * F.stddev_samp(c), d
-                ).alias(f"{n}__lb"),
-            ]
-        elif f.miptype == "integer":
-            aggs += [F.min(c).alias(f"{n}__min"), F.max(c).alias(f"{n}__max")]
-        elif f.miptype == "date":
-            aggs += [F.min(c).alias(f"{n}__min"), F.max(c).alias(f"{n}__max")]
-        elif f.miptype == "nominal":
-            aggs += [
-                F.array_join(F.array_sort(F.collect_set(c)), ",").alias(
-                    f"{n}__categories"
-                ),
-                F.countDistinct(c).alias(f"{n}__ndistinct"),
-            ]
-        else:  # text
-            aggs.append(F.countDistinct(c).alias(f"{n}__ndistinct"))
-        if f.miptype in ("numerical", "integer") and exact != "distributed":
-            # exact percentile / approx sketch join the same wide pass;
-            # the 'distributed' strategy runs its own histogram
-            # rank-selection per field below (the 10^12-row-safe path)
-            aggs.append(
-                _quartiles_col(validated, f"{n}__cast", exact).alias(f"{n}__q")
-            )
-    wide = validated.agg(*aggs).first() if aggs else None
-
-    def _w(name):
-        return None if wide is None else wide[name]
-
-    quart: dict[str, list] = {}
-    for f in present:
-        if f.miptype not in ("numerical", "integer"):
-            continue
-        if exact == "distributed":
-            from dataqualitycontroltool_spark.operators.quantiles import (
-                exact_quantiles,
-            )
-
-            sub = validated.where(
-                F.col(f"{f.name}__cast").isNotNull()
-            ).select(F.col(f"{f.name}__cast").alias(f.name))
-            quart[f.name] = exact_quantiles(sub, f.name, [0.25, 0.5, 0.75])
-        else:
-            q = _w(f"{f.name}__q")
-            quart[f.name] = list(q) if q is not None else [None, None, None]
-
-    # ---- pass B: one wide aggregate for the numerical outlier counts ---
-    outliers: dict[str, int] = {}
-    if num_fields:
-        oaggs = []
-        for n in num_fields:
-            ub, lb = _w(f"{n}__ub"), _w(f"{n}__lb")
-            c = F.col(f"{n}__cast")
-            cond = (
-                F.lit(False)
-                if ub is None or lb is None
-                else (c >= F.lit(float(ub))) | (c <= F.lit(float(lb)))
-            )
-            oaggs.append(
-                F.coalesce(F.sum(cond.cast("long")), F.lit(0)).alias(n)
-            )
-        orow = validated.agg(*oaggs).first()
-        outliers = {n: int(orow[n]) for n in num_fields}
-
-    # ---- assemble per-field frames: literals + the per-field modes -----
-    def lit_of(v, dtype):
-        # always cast: a Python int literal is LongType, but the cast
-        # column (hence the old per-field aggregate) may be int/double
-        return F.lit(v).cast(dtype)
-
-    out = {}
-    for f in present:
-        col = f"{f.name}__cast"
-        dtype = validated.schema[col].dataType.simpleString()
-        n = f.name
-        sub = validated.where(F.col(col).isNotNull()).select(
-            F.col(col).alias(n)
-        )
-        one = spark.range(1)
-        if f.miptype == "numerical":
-            # round INSIDE the plan (F.round = HALF_UP on the shortest
-            # decimal repr — review r4: Python round() is half-even on the
-            # binary double and diverges on ~5% of 7-decimal values, which
-            # would break parity with profile_numerical / the oracles)
-            qd = [
-                F.lit(None).cast("double")
-                if q is None
-                else F.round(F.lit(float(q)), d).cast("double")
-                for q in quart[n]
-            ]
-            out[n] = one.select(
-                lit_of(_w(f"{n}__mean"), "double").alias("mean"),
-                lit_of(_w(f"{n}__std"), "double").alias("std"),
-                lit_of(_w(f"{n}__min"), dtype).alias("min"),
-                lit_of(_w(f"{n}__max"), dtype).alias("max"),
-                qd[0].alias("q1"),
-                qd[1].alias("median"),
-                qd[2].alias("q3"),
-                lit_of(_w(f"{n}__ub"), "double").alias("upperbound"),
-                lit_of(_w(f"{n}__lb"), "double").alias("lowerbound"),
-                F.lit(outliers.get(n, 0)).cast("bigint").alias("outliers"),
-            )
-        elif f.miptype == "integer":
-            qi = [None if q is None else int(q) for q in quart[n]]
-            stats = one.select(
-                lit_of(_w(f"{n}__min"), dtype).alias("min"),
-                lit_of(_w(f"{n}__max"), dtype).alias("max"),
-                lit_of(qi[0], "bigint").alias("q1"),
-                lit_of(qi[1], "bigint").alias("median"),
-                lit_of(qi[2], "bigint").alias("q3"),
-            )
-            out[n] = _mode_df(sub, n).join(F.broadcast(stats)).select(
-                "mode", "freq", "min", "max", "q1", "median", "q3"
-            )
-        elif f.miptype == "date":
-            stats = one.select(
-                lit_of(_w(f"{n}__min"), dtype).alias("min"),
-                lit_of(_w(f"{n}__max"), dtype).alias("max"),
-            )
-            out[n] = _mode_df(sub, n).join(F.broadcast(stats)).select(
-                "mode", "freq", "min", "max"
-            )
-        elif f.miptype == "nominal":
-            stats = one.select(
-                lit_of(_w(f"{n}__categories"), "string").alias("categories"),
-                F.lit(_w(f"{n}__ndistinct")).cast("bigint").alias(
-                    "categories_num"
-                ),
-            )
-            out[n] = _mode_df(sub, n).join(F.broadcast(stats)).select(
-                F.col("mode").alias("top"), "freq", "categories",
-                "categories_num",
-            )
-        else:  # text: distinct from the wide pass; mode/top5/bottom5 per field
-            counts = sub.groupBy(n).count()
-            top5 = (
-                counts.orderBy(F.col("count").desc(), F.col(n).asc())
-                .limit(5)
-                .agg(F.array_join(F.collect_list(n), ",").alias("top5"))
-            )
-            bottom5 = (
-                counts.orderBy(F.col("count").asc(), F.col(n).asc())
-                .limit(5)
-                .agg(F.array_join(F.collect_list(n), ",").alias("bottom5"))
-            )
-            uniq = one.select(
-                F.lit(_w(f"{n}__ndistinct")).cast("bigint").alias("unique")
-            )
-            out[n] = (
-                _mode_df(sub, n)
-                .join(F.broadcast(uniq))
-                .join(F.broadcast(top5))
-                .join(F.broadcast(bottom5))
-                .select(
-                    "unique", F.col("mode").alias("top"), "freq", "top5",
-                    "bottom5",
-                )
-            )
-    return out
+    return {
+        name: literal_frame(df.sparkSession, schema, rows)
+        for name, (schema, rows) in profile_table_rows(
+            df, spec, threshold=threshold, exact=exact, cache=cache
+        ).items()
+    }
 
 
 def group_mode(df: DataFrame, group_keys: list[str], value_col: str) -> DataFrame:

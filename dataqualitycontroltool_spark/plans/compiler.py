@@ -15,7 +15,8 @@ filters pushed down by Catalyst.  The ONLY Python that can run per-batch is the
 date-resuggestion pandas UDF (vectorized, and only compiled in when a date
 field actually exists).
 
-Per-field derived columns (all produced by one ``select``):
+Per-field derived columns (one inner projection computes each field's status
+once; one ``select`` over it derives the rest):
 
 * ``{name}__status``     — 'missing' | 'dtype' | 'constraint' | 'valid'
   (reference buckets: null rows `columnreport.py:439-449`, datatype vs
@@ -175,8 +176,10 @@ class FieldPlan:
 
     # -- suggestions (qcfield.py:64-94, model/qctypes/*.py suggest[cd]_*) ----
 
-    def _suggestd_raw(self, c: Column) -> Column:
-        """Datatype-violation suggestion BEFORE constraint re-validation."""
+    def _suggestd_raw(self, c: Column, st: Column) -> Column | None:
+        """Datatype-violation suggestion BEFORE constraint re-validation;
+        ``st`` is the cell's status.  None for the MIPTypes that never
+        suggest one."""
         s = self.spec
         if s.miptype == "integer":
             # reference: str(int(float(value))) — truncate toward zero
@@ -191,11 +194,10 @@ class FieldPlan:
             # sits in an unconditional ArrowEvalPython node, so only
             # dtype-violating cells are passed in; every other cell arrives
             # as null and costs no Python parse.
-            return _date_suggest_udf(self._py_fmt)(
-                F.when(self.status(c) == STATUS_DTYPE, c))
+            return _date_suggest_udf(self._py_fmt)(F.when(st == STATUS_DTYPE, c))
         # numerical/text/nominal suggestd → null
         # (numerical.py:112-116, text.py:88-92, nominal.py:62-66)
-        return F.lit(None).cast(T.StringType())
+        return None
 
     def _suggestc(self, c: Column) -> Column:
         """Constraint-violation suggestion (nominal Levenshtein repair,
@@ -221,28 +223,36 @@ class FieldPlan:
             ).when(best.getField("d") <= 3, best.getField("v"))
         return F.lit(None).cast(T.StringType())
 
-    def suggestion(self, c: Column) -> Column:
+    def suggestion(self, c: Column, st: Column | None = None) -> Column:
         """Final suggestion: suggestd, re-validated against constraints, falling
         through to suggestc on violation (qcfield.py:81-94); suggestc for
-        constraint violations."""
-        d = self._suggestd_raw(c)
-        d_final = F.when(
-            d.isNotNull() & ~self.constraint_ok(d), self._suggestc(d)
-        ).otherwise(d)
+        constraint violations.  ``st``: the cell's status column when one is
+        already computed (``ValidationPlan.apply``), else built here."""
+        st = self.status(c) if st is None else st
+        d = self._suggestd_raw(c, st)
+        if d is None:
+            d_final = F.lit(None).cast(T.StringType())
+        else:
+            d_final = F.when(
+                d.isNotNull() & ~self.constraint_ok(d), self._suggestc(d)
+            ).otherwise(d)
         return (
-            F.when(self.status(c) == STATUS_DTYPE, d_final)
-            .when(self.status(c) == STATUS_CONSTRAINT, self._suggestc(c))
+            F.when(st == STATUS_DTYPE, d_final)
+            .when(st == STATUS_CONSTRAINT, self._suggestc(c))
             .otherwise(F.lit(None).cast(T.StringType()))
         )
 
-    def corrected(self, c: Column) -> Column:
+    def corrected(
+        self, c: Column, st: Column | None = None, sug: Column | None = None
+    ) -> Column:
         """Corrected raw value: valid values pass through, violations take their
-        suggestion, missing stays NULL (columnreport.py:219-226, 280-343)."""
-        st = self.status(c)
+        suggestion, missing stays NULL (columnreport.py:219-226, 280-343).
+        ``st``/``sug``: already-built status and suggestion columns."""
+        st = self.status(c) if st is None else st
         return (
             F.when(st == STATUS_VALID, c)
             .when(st == STATUS_MISSING, F.lit(None).cast(T.StringType()))
-            .otherwise(self.suggestion(c))
+            .otherwise(self.suggestion(c, st) if sug is None else sug)
         )
 
 
@@ -275,33 +285,45 @@ class ValidationPlan:
     ) -> DataFrame:
         """Single-pass derivation of status/cast/suggestion/corrected columns.
 
+        Each field's status is computed ONCE, in an inner projection; cast,
+        suggestion and corrected are derived from that status column.  Two
+        calls with the same spec, input and arguments build the same plan,
+        so a cached copy of one serves the other (Spark's CacheManager).
+
         Input columns validated by the plan must be strings (reference semantics:
         raw CSV cells).  Non-string inputs are stringified via a lossless-for-
         integers cast; pass typed tables through ``constraints_only`` instead
         when dtype checking is meaningless.
         """
-        cols: list[Column] = [F.col(c) for c in (keep if keep is not None else df.columns)]
         dtypes = dict(df.dtypes)
-        for fp in self.fields:
+        present = [fp for fp in self.fields if fp.spec.name in dtypes]
+        raw = {
+            fp.spec.name: F.col(fp.spec.name) if dtypes[fp.spec.name] == "string"
+            else F.col(fp.spec.name).cast(T.StringType())
+            for fp in present
+        }
+        statused = df.select(
+            "*",
+            *[fp.status(raw[fp.spec.name]).alias(f"{fp.spec.name}__status")
+              for fp in present],
+        )
+        cols: list[Column] = [F.col(c) for c in (keep if keep is not None else df.columns)]
+        for fp in present:
             name = fp.spec.name
-            if name not in dtypes:
-                continue
-            c = F.col(name)
-            if dtypes[name] != "string":
-                c = c.cast(T.StringType())
+            c, st = raw[name], F.col(f"{name}__status")
             if "status" in derive:
-                cols.append(fp.status(c).alias(f"{name}__status"))
+                cols.append(st)
             if "cast" in derive:
                 # typed value only for VALID cells — the profilers consume
                 # exactly the reference's "validated pairs" (columnreport.py:451-464)
-                cols.append(
-                    F.when(fp.status(c) == STATUS_VALID, fp.cast(c)).alias(f"{name}__cast")
-                )
-            if "suggestion" in derive:
-                cols.append(fp.suggestion(c).alias(f"{name}__suggestion"))
-            if "corrected" in derive:
-                cols.append(fp.corrected(c).alias(f"{name}__corrected"))
-        return df.select(*cols)
+                cols.append(F.when(st == STATUS_VALID, fp.cast(c)).alias(f"{name}__cast"))
+            if "suggestion" in derive or "corrected" in derive:
+                sug = fp.suggestion(c, st)
+                if "suggestion" in derive:
+                    cols.append(sug.alias(f"{name}__suggestion"))
+                if "corrected" in derive:
+                    cols.append(fp.corrected(c, st, sug).alias(f"{name}__corrected"))
+        return statused.select(*cols)
 
     def summary(self, validated: DataFrame) -> DataFrame:
         """Per-column violation/null accounting in ONE aggregate pass
@@ -364,12 +386,3 @@ class ValidationPlan:
                 "row_invalid": invalid > 0,
             }
         )
-
-    def corrected_frame(self, validated: DataFrame, keep: list[str] | None = None) -> DataFrame:
-        """The cleaned table (S6 corrected-CSV sink, tablereport.py:151-159):
-        original key columns + corrected value per validated field."""
-        cols = [F.col(c) for c in (keep or [])]
-        cols += [
-            F.col(f"{fp.spec.name}__corrected").alias(fp.spec.name) for fp in self.fields
-        ]
-        return validated.select(*cols)

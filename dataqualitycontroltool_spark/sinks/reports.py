@@ -6,43 +6,56 @@ Reference sheets (`/root/reference/mipqctool/controller/tablereport.py:183-320`
 suggestions; `:151-159` ``save_corrected``): the *metrics* are the contract,
 the spreadsheet rendering is presentation (out of scope per SURVEY §2.1 S7).
 Every table is a small aggregate of the single-pass validated DataFrame —
-compute once (`ValidationPlan.apply`), derive all four tables from it."""
+compute once (`ValidationPlan.apply`, cached), derive all four tables, the
+profiles and the corrected CSV from it."""
 
 from __future__ import annotations
-
-from functools import reduce
-from operator import add
 
 from pyspark.sql import DataFrame, functions as F
 
 from dataqualitycontroltool_spark.operators import profiler
-from dataqualitycontroltool_spark.plans.compiler import ValidationPlan
+from dataqualitycontroltool_spark.plans.compiler import (
+    STATUS_CONSTRAINT,
+    STATUS_DTYPE,
+    STATUS_MISSING,
+    STATUS_VALID,
+    ValidationPlan,
+)
 from dataqualitycontroltool_spark.specs import TableSpec
 
 
 def correction_suggestions(validated: DataFrame, spec: TableSpec) -> DataFrame:
     """'Cleaning suggestions' sheet: per field, each DISTINCT violated raw
     value with its suggested replacement and occurrence count
-    (tablereport.py:290-320).  GroupBy on (field, value) — the distinct
-    violated-value domain is small even when violations are many."""
-    parts = []
-    for f in spec.fields:
-        name = f.name
-        st, sug = F.col(f"{name}__status"), F.col(f"{name}__suggestion")
-        parts.append(
-            validated.where(st.isin("dtype", "constraint"))
-            .groupBy(
-                F.lit(name).alias("field"),
-                # cast to string BEFORE the union: fields have heterogeneous
-                # types and ANSI union resolution would otherwise coerce a
-                # string field's values into a numeric sibling's type
-                F.col(name).cast("string").alias("value"),
-                sug.cast("string").alias("suggestion"),
-                st.alias("violation"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_occurrences"))
+    (tablereport.py:290-320).  Every field's cells are stacked as
+    (field, value, suggestion, violation) and counted by ONE groupBy — the
+    distinct violated-value domain is small even when violations are many."""
+    cells = F.array(*[
+        F.struct(
+            F.lit(f.name).alias("field"),
+            # cast to string BEFORE stacking: fields have heterogeneous types
+            F.col(f.name).cast("string").alias("value"),
+            F.col(f"{f.name}__suggestion").cast("string").alias("suggestion"),
+            F.col(f"{f.name}__status").alias("violation"),
         )
-    return reduce(DataFrame.unionByName, parts)
+        for f in spec.fields
+    ])
+    return (
+        validated.select(F.inline(cells))
+        .where(F.col("violation").isin(STATUS_DTYPE, STATUS_CONSTRAINT))
+        .groupBy("field", "value", "suggestion", "violation")
+        .agg(F.count(F.lit(1)).alias("n_occurrences"))
+    )
+
+
+# columns of the literal report tables
+_GENERAL = ("total_rows bigint, total_columns int, fields_checked int, "
+            "total_violations bigint, missing_columns string, extra_columns string")
+_ROW_STATS = "key string, kind string, rows bigint"
+_COLUMN_STATS = ("field string, nulls bigint, valid bigint, dtype_violations bigint, "
+                 "constraint_violations bigint, total_rows bigint, filled_pct double")
+# the status counted by each of column_stats' four count columns, in order
+_COUNTED = (STATUS_MISSING, STATUS_VALID, STATUS_DTYPE, STATUS_CONSTRAINT)
 
 
 def report_tables(
@@ -56,11 +69,26 @@ def report_tables(
     * ``column_stats``   — per-field nulls/valid/dtype/constraint/filled%
     * ``corrections``    — distinct violated values with suggestions
 
-    With ``cache=True`` (default) the validated frame is persisted — all
-    four tables aggregate it; the CALLER owns the cache lifecycle
-    (unpersist / ``spark.catalog.clearCache()`` / session teardown — same
-    contract as ``dedup.simhash_pairs``).  ``cache=False`` leaves no
-    cached state and recomputes the validation scan per table.
+    The validated frame is ``ValidationPlan(spec).apply(df)`` with every
+    derivation: the same plan ``profile_table`` and ``write_corrected_csv``
+    build, so once it is cached, Spark serves all three from that one
+    in-memory frame and the date-suggestion UDF runs once.  With
+    ``cache=True`` (default) it is cached here; the CALLER owns the cache
+    lifecycle — the CLI's ``validate`` calls ``spark.catalog.clearCache()``
+    after its last sink (or unpersist / session teardown, same contract as
+    ``dedup.simhash_pairs``).  ``cache=False`` leaves no persistent RDD and
+    recomputes the validation wherever ``corrections`` is evaluated.
+
+    Runs ONE wide aggregate at call time (totals, per-field status counts
+    and the ``n_valid`` histogram, whose bands give the quantile rows), so
+    ``general``, ``row_stats`` and ``column_stats`` are literal frames;
+    ``corrections`` is one lazy stacked groupBy.  At ``local[2]`` over a
+    one-partition CSV this call is 3 jobs (cache build, aggregate map and
+    result stages) and writing the four tables 5 more; the CLI's
+    ``validate --clean`` sink sequence (these tables, ``write_report``
+    with profiles, the corrected CSV) is 19 jobs for the 6-field
+    benchmark table, and adding fields of MIPTypes already present adds
+    none.
 
     Spec fields absent from the table are NOT an error: like the
     reference (tablereport.py:207-208 'Missing columns'/'Extra columns'
@@ -68,6 +96,7 @@ def report_tables(
     intersection and the set differences are reported in ``general``."""
     missing = [f.name for f in spec.fields if f.name not in df.columns]
     extra = [c for c in df.columns if c not in spec.field_names]
+    spark = df.sparkSession
     if missing:
         spec = TableSpec(
             fields=tuple(f for f in spec.fields if f.name in df.columns),
@@ -77,7 +106,6 @@ def report_tables(
     if not spec.fields:
         # no spec field exists in the table: emit a valid (empty-bodied)
         # report rather than failing mid-aggregate
-        spark = df.sparkSession
         return {
             "general": df.agg(
                 F.count(F.lit(1)).alias("total_rows"),
@@ -87,62 +115,55 @@ def report_tables(
                 F.lit(",".join(missing)).alias("missing_columns"),
                 F.lit(",".join(extra)).alias("extra_columns"),
             ),
-            "row_stats": spark.createDataFrame(
-                [], "key string, kind string, rows long"),
-            "column_stats": spark.createDataFrame(
-                [], "field string, nulls long, valid long, "
-                    "dtype_violations long, constraint_violations long, "
-                    "total_rows long, filled_pct double"),
-            "corrections": spark.createDataFrame(
-                [], "field string, value string, suggestion string, "
-                    "violation string, n_occurrences long"),
+            "row_stats": profiler.literal_frame(spark, _ROW_STATS, []),
+            "column_stats": profiler.literal_frame(spark, _COLUMN_STATS, []),
+            "corrections": profiler.literal_frame(
+                spark, "field string, value string, suggestion string, "
+                       "violation string, n_occurrences long", []),
         }
 
     plan = ValidationPlan(spec)
-    validated = plan.apply(df, derive=("status", "suggestion"))
+    validated = plan.apply(df)
     if cache:
         validated = validated.cache()
 
-    n_fields = len(spec.fields)
-    general = validated.agg(
-        F.count(F.lit(1)).alias("total_rows"),
-        F.lit(len(df.columns)).alias("total_columns"),
-        F.lit(n_fields).alias("fields_checked"),
-        (
-            reduce(
-                add,
-                [
-                    F.sum((F.col(f"{f.name}__status") != "valid").cast("long"))
-                    for f in spec.fields
-                ],
-            )
-            if spec.fields
-            else F.lit(0).cast("long")
-        ).alias("total_violations"),
-        F.lit(",".join(missing)).alias("missing_columns"),
-        F.lit(",".join(extra)).alias("extra_columns"),
-    )
+    names = [f.name for f in spec.fields]
+    n_fields = len(names)
+    # one wide aggregate; over an empty table every sum is NULL, and so are
+    # the counts, filled_pct and total_violations built from them below
+    aggs = [F.count(F.lit(1))]
+    aggs += [
+        F.sum((F.col(f"{n}__status") == status).cast("long"))
+        for n in names for status in _COUNTED
+    ]
+    aggs += [F.sum((F.col("n_valid") == k).cast("long")) for k in range(n_fields + 1)]
+    wide = list(plan.row_flags(validated).agg(*aggs).first())
+    total, counts, hist = wide[0], wide[1:-n_fields - 1], wide[-n_fields - 1:]
 
-    flags = plan.row_flags(validated)
-    hist = profiler.rows_per_valid_count(flags).withColumnRenamed("n_rows", "rows")
-    buckets = profiler.quantile_bucket_stats(flags, "n_valid", n_fields)
-    row_stats = (
-        hist.select(F.col("n_valid").cast("string").alias("key"),
-                    F.lit("rows_per_valid_count").alias("kind"), "rows")
-        .unionByName(
-            buckets.select(F.col("bucket").alias("key"),
-                           F.lit("valid_pct_band").alias("kind"),
-                           F.col("n_rows").alias("rows"))
-        )
-    )
+    column_stats = []
+    for j, n in enumerate(names):
+        c = counts[4 * j:4 * j + 4]
+        nulls = c[0]
+        filled = None if nulls is None else float(total - nulls) / float(total) * 100.0
+        column_stats.append((n, *c, total, filled))
+    violations = None if total == 0 else sum(total - row[2] for row in column_stats)
+    general = [(total, len(df.columns), n_fields, violations,
+                ",".join(missing), ",".join(extra))]
 
-    column_stats = plan.summary(validated)
-    corrections = correction_suggestions(validated, spec)
+    row_stats = [(str(k), "rows_per_valid_count", rows)
+                 for k, rows in enumerate(hist) if rows]
+    bands: dict[str, int] = {}
+    for k, rows in enumerate(hist):
+        if rows:
+            band = profiler.valid_pct_band(k, n_fields)
+            bands[band] = bands.get(band, 0) + rows
+    row_stats += [(band, "valid_pct_band", rows) for band, rows in bands.items()]
+
     return {
-        "general": general,
-        "row_stats": row_stats,
-        "column_stats": column_stats,
-        "corrections": corrections,
+        "general": profiler.literal_frame(spark, _GENERAL, general),
+        "row_stats": profiler.literal_frame(spark, _ROW_STATS, row_stats),
+        "column_stats": profiler.literal_frame(spark, _COLUMN_STATS, column_stats),
+        "corrections": correction_suggestions(validated, spec),
     }
 
 
@@ -162,30 +183,79 @@ def write_report(
 ) -> None:
     """Write the four report tables (+ per-field MIPType profiles, the
     Excel report's Column Statistics detail) as parquet under
-    ``outdir/<name>/``.  ``threshold`` is the outlier cut in standard
-    deviations (reference ``--outlier``, cli.py:36-38); pass a
-    precomputed ``tables`` dict to reuse one validation pass across
-    several sinks."""
+    ``outdir/<name>/`` and ``outdir/profile_<field>/``.  ``threshold`` is
+    the outlier cut in standard deviations (reference ``--outlier``,
+    cli.py:36-38); pass the ``tables`` of an earlier ``report_tables``
+    call to reuse its validation pass.
+
+    The profiles come from ``profiler.profile_table_rows`` over the same
+    validated plan, so they read the frame ``report_tables`` cached (the
+    caller clears it).  Profiles with the same columns are written by ONE
+    partitioned parquet job (plus one for the empty profiles of fields
+    without a valid value) and then copied to their ``profile_<field>``
+    directories, so the profile writes are at most two jobs per profile
+    layout, not one per field."""
     for name, table in (tables or report_tables(df, spec)).items():
         table.write.mode("overwrite").parquet(f"{outdir}/{name}")
     if with_profiles:
-        for fname, prof in profiler.profile_table(df, spec, threshold=threshold).items():
-            prof.write.mode("overwrite").parquet(f"{outdir}/profile_{fname}")
+        _write_profiles(
+            df.sparkSession,
+            profiler.profile_table_rows(df, spec, threshold=threshold),
+            outdir,
+        )
+
+
+def _write_profiles(spark, profiles: dict, outdir: str) -> None:
+    """Write each ``{field: (schema, rows)}`` profile to
+    ``outdir/profile_<field>``.  Per distinct schema: ONE partitioned
+    parquet write of the profiles that have a row and ONE write of an
+    empty frame if some have none, both to ``outdir/_profile_staging``;
+    each field's files are then copied to its own directory."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    Path = jvm.org.apache.hadoop.fs.Path
+    staging = f"{outdir}/_profile_staging"
+    fs = Path(staging).getFileSystem(conf)
+    by_schema: dict[str, list] = {}
+    for name, (schema, rows) in profiles.items():
+        by_schema.setdefault(schema, []).append((name, rows))
+    for schema, members in by_schema.items():
+        full = [(name, rows) for name, rows in members if rows]
+        empty = [name for name, rows in members if not rows]
+        sources = [(name, f"{staging}/rows/_part={p}") for p, (name, _) in enumerate(full)]
+        sources += [(name, f"{staging}/empty") for name in empty]
+        if full:
+            data = [(p, *row) for p, (_, rows) in enumerate(full) for row in rows]
+            (profiler.literal_frame(spark, f"_part int, {schema}", data)
+             .write.mode("overwrite").partitionBy("_part").parquet(f"{staging}/rows"))
+        if empty:
+            (profiler.literal_frame(spark, schema, [])
+             .write.mode("overwrite").parquet(f"{staging}/empty"))
+        for name, source in sources:
+            target = Path(f"{outdir}/profile_{name}")
+            fs.delete(target, True)
+            jvm.org.apache.hadoop.fs.FileUtil.copy(fs, Path(source), fs, target, False, conf)
+            fs.create(Path(target, "_SUCCESS"), True).close()
+    fs.delete(Path(staging), True)
 
 
 def write_corrected_csv(df: DataFrame, spec: TableSpec, path: str) -> None:
     """S6 corrected-CSV sink (tablereport.py:151-159): violated values
     replaced by their suggestions (null when unsalvageable), written as
-    quoted CSV with headers — the distributed sibling of ``save_corrected``."""
-    plan = ValidationPlan(spec)
-    corrected = plan.apply(df, derive=("corrected",))
+    quoted CSV with headers — the distributed sibling of ``save_corrected``.
+
+    Builds the same ``ValidationPlan(spec).apply(df)`` plan as
+    ``report_tables``, and caches nothing: after ``report_tables`` has
+    cached it, this write is one job over that in-memory frame (no
+    re-validation, no date-suggestion UDF); without a cache it validates
+    the input in that one job."""
     spec_names = {f.name for f in spec.fields}
     cols = [
         F.col(f"{c}__corrected").alias(c) if c in spec_names else F.col(c)
         for c in df.columns
     ]
     (
-        corrected.select(*cols)
+        ValidationPlan(spec).apply(df).select(*cols)
         .write.mode("overwrite")
         .option("header", "true")
         .option("quoteAll", "true")

@@ -6,6 +6,7 @@ reference's test suite (tests/qctypes/test_{numerical,integer,nominal,date,text}
 """
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +15,9 @@ from dataqualitycontroltool_spark.operators import profiler
 from dataqualitycontroltool_spark.operators.duplicates import duplicate_keys, flag_duplicates
 
 FIX = "/root/reference/tests/test_datasets"
+needs_fixtures = pytest.mark.skipif(
+    not os.path.exists(FIX), reason="reference checkout not present"
+)
 
 
 def _load(spark, name):
@@ -33,6 +37,7 @@ NUM_GOLDENS = {
 }
 
 
+@needs_fixtures
 @pytest.mark.parametrize("col", list(NUM_GOLDENS))
 def test_profile_numerical(spark, col):
     df = _load(spark, "random_numeric.csv").select(F.col(col).cast("double").alias(col))
@@ -43,6 +48,7 @@ def test_profile_numerical(spark, col):
         assert row[k] == pytest.approx(v, abs=1e-6), k
 
 
+@needs_fixtures
 def test_outlier_rows(spark):
     df = _load(spark, "random_numeric.csv").select(
         "Patient_id", F.col("Variable_3").cast("double").alias("v")
@@ -60,6 +66,7 @@ INT_GOLDENS = {
 }
 
 
+@needs_fixtures
 @pytest.mark.parametrize("col", list(INT_GOLDENS))
 def test_profile_integer(spark, col):
     df = (
@@ -72,6 +79,7 @@ def test_profile_integer(spark, col):
 
 
 # test_nominal.py:16-25 goldens
+@needs_fixtures
 def test_profile_nominal(spark):
     df = _load(spark, "nominal.csv")
     row = profiler.profile_nominal(df.where(F.col("Variable_1") != ""), "Variable_1").first()
@@ -84,6 +92,7 @@ def test_profile_nominal(spark):
 
 
 # test_date.py:50-58 goldens
+@needs_fixtures
 def test_profile_date(spark):
     df = _load(spark, "dates.csv")
     d1 = df.select(F.try_to_date("Variable_1", "yyyy-M-d").alias("d")).where(F.col("d").isNotNull())
@@ -97,6 +106,7 @@ def test_profile_date(spark):
 
 
 # test_text.py goldens (tie-breaks pinned to value order reproduce them exactly)
+@needs_fixtures
 def test_profile_text(spark):
     df = _load(spark, "text.csv")
     row = profiler.profile_text(df, "Variable_1").first()
@@ -372,9 +382,8 @@ def test_profile_table_fused_scan_shape(spark):
     )
     _, jobs_small = eager_jobs("fuse-test-small", small)
     profs, jobs_full = eager_jobs("fuse-test-full", spec)
-    # the eager phase is two wide aggregates (pass A + pass B); AQE splits
-    # each into a few stage-jobs and the countDistinct Expand (present only
-    # when nominal/text fields exist) adds one more — but the count must be
+    # the eager phase is one wide aggregate and one stacked distribution
+    # query; AQE splits each into a few stage-jobs — but the count must be
     # ~CONSTANT in the number of fields, not ~4 jobs per field as before
     # the fuse (5 fields would read >= 10 here pre-fuse)
     assert jobs_full <= jobs_small + 2, (

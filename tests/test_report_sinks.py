@@ -167,6 +167,11 @@ def test_cache_contracts_leave_no_state(spark, df):
     from dataqualitycontroltool_spark.operators import profiler
 
     spark.catalog.clearCache()
+    # start from no persisted RDD: RDDs that earlier tests persisted outside
+    # the catalog (localCheckpoint) stay until the JVM garbage-collects them
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    for rdd_id in list(persisted.keySet()):
+        persisted.get(rdd_id).unpersist(True)
     t = reports.report_tables(df, SPEC, cache=False)
     base = {k: [tuple(r) for r in v.collect()] for k, v in t.items()}
     p = profiler.profile_table(df, SPEC, cache=False)
