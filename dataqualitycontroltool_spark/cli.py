@@ -57,8 +57,8 @@ def cmd_validate(args) -> int:
     # the profiles (write_report), the corrected CSV and every rendered
     # format read that one cached frame, so the date-suggestion UDF runs
     # once.  This command owns the cache and clears it at the end.  The
-    # sinks run a fixed job count (19 for a 6-field table at local[2]),
-    # whatever the number of fields of a MIPType.
+    # sinks run 16 jobs plus one profile write per field (22 for a
+    # 6-field table at local[2]).
     tables = reports.report_tables(df, spec)
     reports.write_report(df, spec, args.outdir, threshold=args.outlier,
                          tables=tables)

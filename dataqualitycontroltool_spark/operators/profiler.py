@@ -247,29 +247,57 @@ _PROFILE_SCHEMAS = {
 }
 
 
-def profile_table_rows(
+def profile_table(
     df: DataFrame, spec, threshold: float = 3.0, exact: bool = True,
     cache: bool = True,
-) -> dict[str, tuple[str, list[tuple]]]:
-    """{field_name: (schema DDL, rows)} — the computed profiles behind
-    :func:`profile_table`, as driver-side rows (at most one per field).
+) -> dict:
+    """{field_name: profile DataFrame} for every spec field, profiling only
+    the cast-VALID values — exactly the reference's per-column stats flow
+    (``controller/columnreport.py:439-464``: validate → cast valid pairs →
+    ``profile_<miptype>``), but from ONE validation pass instead of a
+    re-scan per column (the reference's O(cols × file) anti-pattern,
+    SURVEY §4.1).  Each frame has the rows and columns of the field's
+    direct ``profile_<miptype>`` over its cast-valid values.
 
-    Runs eagerly, in two queries whatever the number of fields:
+    The statistics are computed at call time, in two queries whatever the
+    number of fields:
 
     * ONE wide aggregate for every agg-able scalar: numerical mean/std/
       min/max/rounded quartiles/outlier bounds, integer min/max/
       quartiles, date min/max, nominal sorted categories;
     * ONE distribution query: every cast-valid integer/date/nominal/text
       cell is stacked as (field, typed value) — and every numerical cell
-      as (field, outside the collected bounds?) — counted by ONE
-      ``groupBy``, ranked per field by window; only rank <= 5 rows are
-      collected, so driver memory is O(fields).  Each stacked value keeps
-      a column of its own type, so ties break on the smallest TYPED value
+      as (field, outside the collected bounds?) — and counted by ONE
+      ``groupBy``.  Each field's counts are ranked twice (count desc for
+      the mode and top-5, count asc for bottom-5) by one ``row_number``
+      over (field, ranking), so Spark keeps at most 5 rows per field and
+      ranking in every map task before the ranks are shuffled; the
+      distinct counts of nominal/text fields are a ``groupBy(field)``
+      count of their (field, value) groups.  Only those rows are
+      collected: driver memory is O(fields).  Each stacked value keeps a
+      column of its own type, so ties break on the smallest TYPED value
       (9 before 10), like the direct profilers.
 
-    At ``local[2]`` over a one-partition input that is 5 jobs.
+    At ``local[2]`` over a one-partition input that is 5 jobs, 7 when a
+    nominal or text field is present.
     ``exact="distributed"`` adds its own per-field rank-selection jobs
-    (the 10^12-row-safe quartiles)."""
+    (the 10^12-row-safe quartiles).  Each returned frame is a literal
+    frame of at most one row, so collecting or writing it is one job that
+    never rescans the source.
+
+    The validated frame is ``ValidationPlan(spec).apply(df)`` with every
+    derivation — the same plan ``report_tables`` and
+    ``write_corrected_csv`` build — so when ``report_tables`` has cached
+    it, these scans read that one cached frame.  With ``cache=True``
+    (default) this call caches it (a no-op when it already is); the
+    CALLER owns the cache lifecycle (``spark.catalog.clearCache()`` at the
+    end of the CLI's ``validate``, or unpersist / session teardown — same
+    contract as ``dedup.simhash_pairs``).  ``cache=False`` leaves no
+    persistent RDD behind.
+
+    Spec fields absent from the table are skipped (no profile entry) —
+    same header-intersection tolerance as ``report_tables``; the missing
+    set is the report's job to surface, not an AnalysisException here."""
     from dataqualitycontroltool_spark.plans.compiler import ValidationPlan
 
     present = [f for f in spec.fields if f.name in df.columns]
@@ -326,6 +354,7 @@ def profile_table_rows(
     ndistinct: dict[int, int] = {}
     if stacked:
         slots = sorted({t for _, t in stacked.values()})
+        values = [f"v{k}" for k in range(len(slots))]
         cells = F.array_compact(F.array(*[
             F.when(cast(present[i]).isNotNull(), F.struct(
                 F.lit(i).alias("fid"),
@@ -334,27 +363,40 @@ def profile_table_rows(
             ))
             for i, (v, vtype) in stacked.items()
         ]))
-        values = [f"v{k}" for k in range(len(slots))]
         counts = (
             validated.select(F.inline(cells))
             .groupBy("fid", *values)
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        by = Window.partitionBy("fid")
-        asc = [F.col(v).asc() for v in values]
-        ranked = counts.select(
-            "*",
-            F.row_number().over(by.orderBy(F.col("n").desc(), *asc)).alias("r_top"),
-            F.row_number().over(by.orderBy(F.col("n").asc(), *asc)).alias("r_bottom"),
-            F.count(F.lit(1)).over(by).alias("ndistinct"),
+        # every count twice: ranking 0 orders by -n (top), ranking 1 by n
+        # (bottom); a lone row_number <= 5 per (fid, ranking) is what lets
+        # Spark trim the rows before the shuffle (WindowGroupLimit)
+        twice = counts.select("fid", "n", *values, F.posexplode(
+            F.array(-F.col("n"), F.col("n"))).alias("ranking", "key"))
+        by = Window.partitionBy("fid", "ranking").orderBy("key", *values)
+        ranked = (
+            twice.select("fid", "ranking", "n", *values, F.row_number().over(by).alias("r"))
+            .where(F.col("r") <= 5)
         )
-        for r in ranked.where((F.col("r_top") <= 5) | (F.col("r_bottom") <= 5)).collect():
-            v = (r[f"v{slots.index(stacked[r.fid][1])}"], r.n)
-            if r.r_top <= 5:
-                top[r.fid].append((r.r_top, v))
-            if r.r_bottom <= 5:
-                bottom[r.fid].append((r.r_bottom, v))
-            ndistinct[r.fid] = r.ndistinct
+        # distinct values of the nominal/text fields: a groupBy(fid) count
+        # of their (fid, value) groups.  Over a cached frame Spark does not
+        # reuse the counts' shuffle in this second branch, so it stacks
+        # only these fields' cells
+        counted = [i for i in stacked if present[i].miptype in ("nominal", "text")]
+        if counted:
+            ranked = ranked.unionByName(
+                counts.where(F.col("fid").isin(counted))
+                .groupBy("fid").agg(F.count(F.lit(1)).alias("n"))
+                .select("fid", F.lit(2).alias("ranking"), "n",
+                        *[F.lit(None).cast(t).alias(v) for v, t in zip(values, slots)],
+                        F.lit(0).alias("r"))
+            )
+        for r in ranked.collect():
+            if r.ranking == 2:
+                ndistinct[r.fid] = r.n
+            else:
+                v = (r[f"v{slots.index(stacked[r.fid][1])}"], r.n)
+                (top if r.ranking == 0 else bottom)[r.fid].append((r.r, v))
         for ranks in (top, bottom):
             for i in ranks:
                 ranks[i] = [v for _, v in sorted(ranks[i])]
@@ -385,47 +427,8 @@ def profile_table_rows(
                 rows = [(mode, freq, w["categories"], ndistinct[i])]
             else:  # text
                 rows = [(ndistinct[i], mode, freq, joined(top[i]), joined(bottom[i]))]
-        out[f.name] = (schema, rows)
+        out[f.name] = literal_frame(df.sparkSession, schema, rows)
     return out
-
-
-def profile_table(
-    df: DataFrame, spec, threshold: float = 3.0, exact: bool = True,
-    cache: bool = True,
-) -> dict:
-    """{field_name: profile DataFrame} for every spec field, profiling only
-    the cast-VALID values — exactly the reference's per-column stats flow
-    (``controller/columnreport.py:439-464``: validate → cast valid pairs →
-    ``profile_<miptype>``), but from ONE validation pass instead of a
-    re-scan per column (the reference's O(cols × file) anti-pattern,
-    SURVEY §4.1).  Each frame has the rows and columns of the field's
-    direct ``profile_<miptype>`` over its cast-valid values.
-
-    The statistics are computed at call time by
-    :func:`profile_table_rows` in two queries whatever the number of
-    fields (a wide aggregate, then one stacked distribution query);
-    each returned frame is a literal frame of at most one row, so
-    collecting or writing it is one job that never rescans the source.
-
-    The validated frame is ``ValidationPlan(spec).apply(df)`` with every
-    derivation — the same plan ``report_tables`` and
-    ``write_corrected_csv`` build — so when ``report_tables`` has cached
-    it, these scans read that one cached frame.  With ``cache=True``
-    (default) this call caches it (a no-op when it already is); the
-    CALLER owns the cache lifecycle (``spark.catalog.clearCache()`` at the
-    end of the CLI's ``validate``, or unpersist / session teardown — same
-    contract as ``dedup.simhash_pairs``).  ``cache=False`` leaves no
-    persistent RDD behind.
-
-    Spec fields absent from the table are skipped (no profile entry) —
-    same header-intersection tolerance as ``report_tables``; the missing
-    set is the report's job to surface, not an AnalysisException here."""
-    return {
-        name: literal_frame(df.sparkSession, schema, rows)
-        for name, (schema, rows) in profile_table_rows(
-            df, spec, threshold=threshold, exact=exact, cache=cache
-        ).items()
-    }
 
 
 def group_mode(df: DataFrame, group_keys: list[str], value_col: str) -> DataFrame:

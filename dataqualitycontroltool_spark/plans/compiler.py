@@ -242,17 +242,14 @@ class FieldPlan:
             .otherwise(F.lit(None).cast(T.StringType()))
         )
 
-    def corrected(
-        self, c: Column, st: Column | None = None, sug: Column | None = None
-    ) -> Column:
+    def corrected(self, c: Column, st: Column, sug: Column) -> Column:
         """Corrected raw value: valid values pass through, violations take their
         suggestion, missing stays NULL (columnreport.py:219-226, 280-343).
-        ``st``/``sug``: already-built status and suggestion columns."""
-        st = self.status(c) if st is None else st
+        ``st``/``sug``: the cell's status and suggestion columns."""
         return (
             F.when(st == STATUS_VALID, c)
             .when(st == STATUS_MISSING, F.lit(None).cast(T.StringType()))
-            .otherwise(self.suggestion(c, st) if sug is None else sug)
+            .otherwise(sug)
         )
 
 

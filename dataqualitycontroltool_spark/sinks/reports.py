@@ -86,9 +86,8 @@ def report_tables(
     one-partition CSV this call is 3 jobs (cache build, aggregate map and
     result stages) and writing the four tables 5 more; the CLI's
     ``validate --clean`` sink sequence (these tables, ``write_report``
-    with profiles, the corrected CSV) is 19 jobs for the 6-field
-    benchmark table, and adding fields of MIPTypes already present adds
-    none.
+    with profiles, the corrected CSV) is 16 jobs plus one profile write
+    per field: 22 for the 6-field benchmark table.
 
     Spec fields absent from the table are NOT an error: like the
     reference (tablereport.py:207-208 'Missing columns'/'Extra columns'
@@ -188,55 +187,15 @@ def write_report(
     cli.py:36-38); pass the ``tables`` of an earlier ``report_tables``
     call to reuse its validation pass.
 
-    The profiles come from ``profiler.profile_table_rows`` over the same
+    The profiles come from ``profiler.profile_table`` over the same
     validated plan, so they read the frame ``report_tables`` cached (the
-    caller clears it).  Profiles with the same columns are written by ONE
-    partitioned parquet job (plus one for the empty profiles of fields
-    without a valid value) and then copied to their ``profile_<field>``
-    directories, so the profile writes are at most two jobs per profile
-    layout, not one per field."""
+    caller clears it).  Each profile is a literal frame of at most one row,
+    written by one job to its own ``profile_<field>`` directory."""
     for name, table in (tables or report_tables(df, spec)).items():
         table.write.mode("overwrite").parquet(f"{outdir}/{name}")
     if with_profiles:
-        _write_profiles(
-            df.sparkSession,
-            profiler.profile_table_rows(df, spec, threshold=threshold),
-            outdir,
-        )
-
-
-def _write_profiles(spark, profiles: dict, outdir: str) -> None:
-    """Write each ``{field: (schema, rows)}`` profile to
-    ``outdir/profile_<field>``.  Per distinct schema: ONE partitioned
-    parquet write of the profiles that have a row and ONE write of an
-    empty frame if some have none, both to ``outdir/_profile_staging``;
-    each field's files are then copied to its own directory."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    staging = f"{outdir}/_profile_staging"
-    fs = Path(staging).getFileSystem(conf)
-    by_schema: dict[str, list] = {}
-    for name, (schema, rows) in profiles.items():
-        by_schema.setdefault(schema, []).append((name, rows))
-    for schema, members in by_schema.items():
-        full = [(name, rows) for name, rows in members if rows]
-        empty = [name for name, rows in members if not rows]
-        sources = [(name, f"{staging}/rows/_part={p}") for p, (name, _) in enumerate(full)]
-        sources += [(name, f"{staging}/empty") for name in empty]
-        if full:
-            data = [(p, *row) for p, (_, rows) in enumerate(full) for row in rows]
-            (profiler.literal_frame(spark, f"_part int, {schema}", data)
-             .write.mode("overwrite").partitionBy("_part").parquet(f"{staging}/rows"))
-        if empty:
-            (profiler.literal_frame(spark, schema, [])
-             .write.mode("overwrite").parquet(f"{staging}/empty"))
-        for name, source in sources:
-            target = Path(f"{outdir}/profile_{name}")
-            fs.delete(target, True)
-            jvm.org.apache.hadoop.fs.FileUtil.copy(fs, Path(source), fs, target, False, conf)
-            fs.create(Path(target, "_SUCCESS"), True).close()
-    fs.delete(Path(staging), True)
+        for fname, prof in profiler.profile_table(df, spec, threshold=threshold).items():
+            prof.write.mode("overwrite").parquet(f"{outdir}/profile_{fname}")
 
 
 def write_corrected_csv(df: DataFrame, spec: TableSpec, path: str) -> None:

@@ -167,18 +167,19 @@ def test_cache_contracts_leave_no_state(spark, df):
     from dataqualitycontroltool_spark.operators import profiler
 
     spark.catalog.clearCache()
-    # start from no persisted RDD: RDDs that earlier tests persisted outside
-    # the catalog (localCheckpoint) stay until the JVM garbage-collects them
-    persisted = spark.sparkContext._jsc.getPersistentRDDs()
-    for rdd_id in list(persisted.keySet()):
-        persisted.get(rdd_id).unpersist(True)
+
+    def persistent_ids():
+        # snapshot-compare, not isEmpty: other tests in the shared session
+        # may hold localCheckpoint RDDs that clearCache() never touches
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persistent_ids()
     t = reports.report_tables(df, SPEC, cache=False)
     base = {k: [tuple(r) for r in v.collect()] for k, v in t.items()}
     p = profiler.profile_table(df, SPEC, cache=False)
     for v in p.values():
         v.collect()
-    jsc = spark.sparkContext._jsc.sc()
-    assert jsc.getPersistentRDDs().isEmpty()
+    assert persistent_ids() <= before
     # cached variant computes the same tables (then clean up)
     t2 = reports.report_tables(df, SPEC)
     assert {k: [tuple(r) for r in v.collect()] for k, v in t2.items()} == base

@@ -1,7 +1,7 @@
 """``validate --clean`` from one cached validation pass: the profile table
 equals the direct per-field profilers, and the CLI's sink sequence runs a
-job count that does not grow with the number of fields, over one cached
-frame, with the date-suggestion UDF run once."""
+fixed job count plus one write per profile, over one cached frame, with
+the date-suggestion UDF run once."""
 
 import csv
 
@@ -40,6 +40,9 @@ COLUMNS = {
               + ["eps"] * 2 + ["zeta", "eta", "theta", "iota"]),
     # boolean nominal
     "flag": _pad(["1", "0", "1", "yes", "0", "1"]),
+    # one distinct value per row: every count ties, the typed order picks
+    # 8 where the string order would pick "10"
+    "id": [str(k) for k in range(8, 8 + N)],
     # an integer field without one valid value: an empty profile
     "none": _pad([], "x"),
 }
@@ -54,6 +57,7 @@ FIELDS = [
      "constraints": {"enum": ["a", "b", "c"]}},
     {"name": "t", "type": "string", "MIPType": "text"},
     {"name": "flag", "type": "boolean", "MIPType": "nominal"},
+    {"name": "id", "type": "integer", "MIPType": "integer"},
     {"name": "none", "type": "integer", "MIPType": "integer"},
 ]
 
@@ -97,6 +101,7 @@ def test_profile_table_equals_direct_profilers(spark):
     text = profs["t"].first()
     assert text["top5"] == "alpha,beta,delta,eps,gamma"
     assert text["bottom5"] == "eta,iota,theta,zeta,delta"
+    assert profs["id"].first()["mode"] == 8
     assert profs["none"].count() == 0
 
 
@@ -168,46 +173,43 @@ def _sink_sequence(spark, tmp_path, tag, columns, fields):
 
 
 def test_sink_sequence_jobs_and_shared_cache(spark, tmp_path):
-    # one field per MIPType, plus one without a valid value: 6 profile
-    # layouts would add a seventh write (the boolean nominal field's)
-    fields = [f for f in FIELDS if f["name"] != "flag"]
-    columns = {f["name"]: COLUMNS[f["name"]] for f in fields}
-    jobs, persistent, ran, out = _sink_sequence(spark, tmp_path, "single", columns, fields)
-    assert jobs <= 20, jobs
+    jobs, persistent, ran, out = _sink_sequence(spark, tmp_path, "single", COLUMNS, FIELDS)
+    # 16 fixed jobs (report_tables 3, the four table writes 5, profile_table
+    # 7, the corrected CSV 1) and one write per profile
+    assert jobs <= 16 + len(FIELDS), jobs
     assert persistent == 1, persistent
     assert ran == 1, ran
     # the outputs are all there
     for name in ("general", "row_stats", "column_stats", "corrections",
-                 *[f"profile_{f['name']}" for f in fields]):
+                 *[f"profile_{f['name']}" for f in FIELDS]):
         assert spark.read.parquet(f"{out}/{name}").columns, name
     assert spark.read.parquet(f"{out}/profile_none").count() == 0
     back = csvsource.read_csv(spark, f"{out}/corrected_csv/*.csv")
     assert back.count() == N
 
-    # the same fields twice over: the job count does not follow
-    doubled = {**columns, **{f"{k}_2": v for k, v in columns.items()}}
-    fields2 = fields + [{**f, "name": f"{f['name']}_2"} for f in fields]
+    # the same fields twice over: only the added profile writes follow
+    doubled = {**COLUMNS, **{f"{k}_2": v for k, v in COLUMNS.items()}}
+    fields2 = FIELDS + [{**f, "name": f"{f['name']}_2"} for f in FIELDS]
     jobs2, persistent2, ran2, _ = _sink_sequence(spark, tmp_path, "doubled", doubled, fields2)
-    assert jobs2 <= jobs + 2, (jobs, jobs2)
+    assert jobs2 <= jobs + len(FIELDS), (jobs, jobs2)
     assert (persistent2, ran2) == (1, 1)
 
 
-def test_profiles_written_once_per_layout(spark, tmp_path):
-    """write_report moves each profile out of the one partitioned write of
-    its layout: every profile directory reads back as the field's own
-    profile, and no staging directory is left."""
+def test_profile_ranks_trimmed_before_shuffle(spark):
+    """The distribution query ranks with a lone row_number <= 5 per
+    (field, ranking), which Spark plans as a partial WindowGroupLimit
+    before the shuffle: no task receives a field's whole distinct set."""
     spec = _spec(FIELDS)
     df = spark.createDataFrame(list(zip(*COLUMNS.values())), list(COLUMNS))
-    out = tmp_path / "rep"
-    reports.write_report(df, spec, str(out), tables=reports.report_tables(df, spec, cache=False))
-    profs = profiler.profile_table(df, spec, cache=False)
-    for name, prof in profs.items():
-        back = spark.read.parquet(str(out / f"profile_{name}"))
-        assert back.columns == prof.columns, name
-        assert sorted(back.collect()) == sorted(prof.collect()), name
-        assert (out / f"profile_{name}" / "_SUCCESS").exists()
-    assert not (out / "_profile_staging").exists()
-    # a second write over the same directory replaces every profile
-    reports.write_report(df, spec, str(out), tables=reports.report_tables(df, spec, cache=False))
-    assert spark.read.parquet(str(out / "profile_n")).count() == 1
-    spark.catalog.clearCache()
+    first = _last_execution_id(spark)
+    profiler.profile_table(df, spec, cache=False)
+    store = spark._jsparkSession.sharedState().statusStore()
+    plans = []
+    it = store.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > first:
+            plans.append(e.physicalPlanDescription())
+    ranked = [p for p in plans if "row_number()" in p]
+    assert len(ranked) == 1, len(ranked)
+    assert "WindowGroupLimit" in ranked[0] and "Partial" in ranked[0]
