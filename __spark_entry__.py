@@ -206,9 +206,6 @@ def q_ann_topk_bruteforce(spark, sf_dir):
     )
 
 
-EMB_DIM = 64  # embeddings.parquet vector width (all SFs)
-
-
 def _fixed_centroids(emb):
     """SQL-replayable centroids shared by the IVF and semantic-dedup
     oracles: normalized embeddings of vec_id 0..7 (the oracles pin the
@@ -222,47 +219,13 @@ def _fixed_centroids(emb):
     return C / np.linalg.norm(C, axis=1, keepdims=True)
 
 
-def _fixed_centroids_raw(emb):
-    """RAW (un-normalized) embeddings of vec_id 0..7 as plain Python float
-    lists — float32→double is exact, so these literals replay bit-identically
-    in the oracle's `WHERE vec_id < 8` CTE; norms are folded sequentially by
-    similarity.centroid_norms to match both engines' fold order."""
-    return [
-        [float(x) for x in r.embedding]
-        for r in emb.where(F.col("vec_id") < 8).orderBy("vec_id").collect()
-    ]
-
-
-def q_ann_topk_directed(spark, sf_dir):
-    """Query-directed multi-probe ANN (Lv et al. 2007) over affinity-
-    centered LSH bits at the fixed-radius-2 probe budget (37 probes) —
-    measured recall@5 0.700 vs 0.325 for fixed-r2 random hyperplanes at the
-    same budget (sf0.01).  Bits and probe scores derive from the same 8
-    fixed centroids the IVF oracle pins, so the whole probe sequence
-    replays in SQL."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.directed_topk(
-        emb, "vec_id", "embedding", ANN_QUERY_IDS, k=5,
-        centroids_raw=_fixed_centroids_raw(emb), probe_budget=37,
-    )
-
-
-def q_ann_topk_bucketed(spark, sf_dir):
-    """Sign-LSH bucketed top-5 (8-bit bucket key from SEEDED random
-    hyperplanes, inlined as literals on both engines) — the 10^12-row scale
-    path."""
-    return similarity.bucketed_topk(
-        load_table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-        ANN_QUERY_IDS, k=5, dim=EMB_DIM,
-    )
-
-
 def q_ann_topk_ivf(spark, sf_dir):
     """IVF ANN (nprobe=2) with FIXED, SQL-replayable centroids — the
     normalized embeddings of vec_id 0..7 — so cluster assignment and probe
     selection replay exactly in the DuckDB oracle (argmax ties pinned to
     the lowest centroid id on both sides).  The seeded-k-means quantizer
-    path stays covered by the full-probe==brute-force unit test."""
+    path stays covered by the full-probe==brute-force and partial-probe
+    recall unit tests."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.ivf_topk(
         emb, "vec_id", "embedding", ANN_QUERY_IDS, k=5, nprobe=2,
@@ -271,22 +234,18 @@ def q_ann_topk_ivf(spark, sf_dir):
 
 
 def q_ann_recall(spark, sf_dir):
-    """Measured recall@5 of the two approximate ANN paths against exact
-    brute force over the same 8 queries — the metric production ANN is
-    actually graded on (VERDICT r3 #4): sign-LSH bucketed (8 seeded bits)
-    single-probe AND multi-probe radius 2 (Lv et al. 2007), and IVF with
-    nprobe=2 of the 8 fixed centroids.  One row per method:
+    """Measured recall@5 of the IVF path (nprobe=2 of the 8 fixed centroids)
+    against exact brute force over the same 8 queries — the metric
+    production ANN is actually graded on (VERDICT r3 #4).  One row:
     (method, n_hits, n_exact, recall) with recall = |approx ∩ exact| /
-    |exact| on (query, neighbor) pairs.  The comparison is three left-semi
-    joins + 1-row aggregates — the exact result is by construction
+    |exact| on (query, neighbor) pairs.  The comparison is a left-semi
+    join + a 1-row aggregate — the exact result is by construction
     queries×k rows, so nothing here is ever large."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # the exact result is by construction queries*k rows: materialize it
-    # ONCE (bounded driver transfer, like the GD gradients) instead of
-    # letting the O(corpus) brute-force subplan recompute inside all three
-    # union branches' semi-joins AND each branch's totals cross-join
-    # (review r4: ~6 full corpus scans; persist gotcha #6 without the
-    # persisted-state residue a queries() entry must not leave behind)
+    # the exact result is by construction queries*k rows: collect it once
+    # (bounded driver transfer, like the GD gradients), so n_exact is a
+    # driver-side count and the semi-join reads a local relation instead of
+    # the O(corpus) brute-force subplan
     exact_rows = similarity.brute_force_topk(
         emb, "vec_id", "embedding", ANN_QUERY_IDS, k=5
     ).select("query_id", "neighbor_id").collect()
@@ -294,48 +253,20 @@ def q_ann_recall(spark, sf_dir):
         [(int(r.query_id), int(r.neighbor_id)) for r in exact_rows],
         "query_id bigint, neighbor_id bigint",
     )
-    approx = {
-        "bucketed": similarity.bucketed_topk(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, k=5, dim=EMB_DIM
-        ),
-        "bucketed_mp2": similarity.bucketed_topk(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, k=5, dim=EMB_DIM,
-            probe_hamming=2,
-        ),
-        "ivf_nprobe2": similarity.ivf_topk(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, k=5, nprobe=2,
-            centroids=_fixed_centroids(emb),
-        ),
-        # r5: query-directed multi-probe (Lv et al.) over affinity-centered
-        # bits at the SAME 37-probe budget as bucketed_mp2 — the measured
-        # answer to r4's "0.325 at radius 2" finding
-        "directed_mp37": similarity.directed_topk(
-            emb, "vec_id", "embedding", ANN_QUERY_IDS, k=5,
-            centroids_raw=_fixed_centroids_raw(emb), probe_budget=37,
-        ),
-    }
-    tot = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    parts = []
-    for name, adf in approx.items():
-        hits = exact.join(
-            adf.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-            "left_semi",
-        )
-        parts.append(
-            hits.agg(F.count(F.lit(1)).alias("n_hits"))
-            .crossJoin(F.broadcast(tot))
-            .select(
-                F.lit(name).alias("method"),
-                F.col("n_hits").cast("bigint").alias("n_hits"),
-                F.col("n_exact").cast("bigint").alias("n_exact"),
-                F.round(F.col("n_hits") / F.col("n_exact"), 6).alias("recall"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    ivf = similarity.ivf_topk(
+        emb, "vec_id", "embedding", ANN_QUERY_IDS, k=5, nprobe=2,
+        centroids=_fixed_centroids(emb),
+    )
+    hits = exact.join(
+        ivf.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_semi"
+    )
+    n_exact = len(exact_rows)
+    return hits.agg(F.count(F.lit(1)).cast("bigint").alias("n_hits")).select(
+        F.lit("ivf_nprobe2").alias("method"),
+        "n_hits",
+        F.lit(n_exact).cast("bigint").alias("n_exact"),
+        F.round(F.col("n_hits") / F.lit(n_exact), 6).alias("recall"),
+    )
 
 
 def q_text_quality(spark, sf_dir):
@@ -1215,8 +1146,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "export_shards_documents": q_export_shards_documents,
         "pack_sequences_documents": q_pack_sequences_documents,
         "ann_recall": q_ann_recall,
-        # -- new in r5 (never driver-checked -> stays inside the 50-row gate)
-        "ann_topk_directed": q_ann_topk_directed,
         # -- two rounds of green driver rows each (r3+r4) -------------------
         "profile_numeric_quantity": q_profile_numeric_quantity,
         "profile_numeric_extendedprice": q_profile_numeric_extendedprice,
@@ -1237,7 +1166,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash_pairs": q_dedup_simhash_pairs,
         "dedup_embedding_cosine": q_dedup_embedding_cosine,
         "ann_topk_bruteforce": q_ann_topk_bruteforce,
-        "ann_topk_bucketed": q_ann_topk_bucketed,
         "ann_topk_ivf": q_ann_topk_ivf,
         "text_quality": q_text_quality,
         "text_lang_marker": q_text_lang_marker,
@@ -1610,84 +1538,6 @@ _CLASSIFIER_FEAT_SQL = r"""feat AS MATERIALIZED (
     )"""
 
 
-def _hyperplane_bucket_sql() -> str:
-    """The seeded sign-LSH bucket key as DuckDB SQL over the double vector
-    `v`: the SAME hyperplane constants similarity.sign_bucket inlines as
-    Catalyst literals (rounded to 6 decimals on both sides, so the dot
-    products are bit-identical double math)."""
-    from dataqualitycontroltool_spark.operators.similarity import hyperplanes
-
-    terms = []
-    for i, h in enumerate(hyperplanes(64, 8, 42)):
-        lit = "[" + ", ".join(repr(x) for x in h) + "]"
-        terms.append(
-            f"(CASE WHEN list_dot_product(v, {lit}) >= 0 THEN {1 << i} ELSE 0 END)"
-        )
-    return " + ".join(terms)
-
-def _directed_cte_sql(n_bits: int = 8, budget: int = 37) -> str:
-    """CTE chain (expects the `n` CTE of _EMB_CTE in scope) for the
-    query-directed multi-probe ANN twin of similarity.directed_topk:
-    affinity-centered bits from the 8 fixed centroids (cosine to centroid i
-    minus the row's mean affinity — MAX(CASE) pivot so the aggregation is
-    order-independent, then a left-assoc chained sum for the mean, exactly
-    the fold order the Spark side uses), per-query mask scores
-    Σ margin_i² over set bits (round-6, mask-ascending ties), top-`budget`
-    probes, candidate fetch + round-6 cosine rank."""
-    aff_cols = ",\n                     ".join(
-        f"MAX(CASE WHEN dc.cid = {i} THEN list_dot_product(n.v, dc.cv)"
-        f" / (n.nrm * dc.cnrm) END) AS a{i}"
-        for i in range(n_bits)
-    )
-    mu = "(" + " + ".join(f"a{i}" for i in range(n_bits)) + f") / {float(n_bits)!r}"
-    bucket = " + ".join(
-        f"(CASE WHEN a{i} - mu >= 0 THEN {1 << i} ELSE 0 END)" for i in range(n_bits)
-    )
-    margins = ", ".join(f"a{i} - mu AS m{i}" for i in range(n_bits))
-    score = "\n                       + ".join(
-        f"(CASE WHEN (m.mask & {1 << i}) <> 0 THEN q.m{i} * q.m{i} ELSE 0.0 END)"
-        for i in range(n_bits)
-    )
-    return f"""
-            dc AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm
-                   FROM n WHERE vec_id < {n_bits}),
-            daff AS (
-              SELECT n.vec_id,
-                     {aff_cols}
-              FROM n CROSS JOIN dc GROUP BY n.vec_id
-            ),
-            dmu AS (SELECT vec_id, {mu} AS mu, * EXCLUDE (vec_id) FROM daff),
-            dbk AS (SELECT vec_id,
-                           CAST({bucket} AS INT) AS bucket,
-                           {margins}
-                    FROM dmu),
-            dmask AS (SELECT CAST(range AS INT) AS mask FROM range(0, {1 << n_bits})),
-            dprob AS (
-              SELECT vec_id AS query_id, xor(bucket, mask) AS pb FROM (
-                SELECT q.vec_id, q.bucket, m.mask,
-                       row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                         round({score}, 6) ASC, m.mask ASC) AS pr
-                FROM dbk q CROSS JOIN dmask m WHERE q.vec_id < 8
-              ) WHERE pr <= {budget}
-            ),
-            dscored AS (
-              SELECT p.query_id, b.vec_id AS neighbor_id,
-                     round(list_dot_product(qv.v, t.v) / (qv.nrm * t.nrm), 6) AS cos
-              FROM dprob p
-              JOIN dbk b ON b.bucket = p.pb
-              JOIN n t ON t.vec_id = b.vec_id
-              JOIN n qv ON qv.vec_id = p.query_id
-              WHERE b.vec_id <> p.query_id
-            ),
-            ddir AS (
-              SELECT query_id, neighbor_id, cos, CAST(rnk AS INT) AS rank FROM (
-                SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY cos DESC, neighbor_id ASC) AS rnk
-                FROM dscored
-              ) WHERE rnk <= 5
-            )"""
-
-
 def _scrub_sql_expr(col: str) -> str:
     from dataqualitycontroltool_spark.graft.scrub import scrub_sql
 
@@ -2045,25 +1895,6 @@ def oracle_sql() -> dict[str, str]:
               SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                      round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) AS cos
               FROM q JOIN n c ON c.vec_id <> q.vec_id
-            ),
-            r AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                                ORDER BY cos DESC, neighbor_id ASC) AS rnk
-                  FROM scored)
-            SELECT query_id, neighbor_id, cos, CAST(rnk AS INT) AS rank
-            FROM r WHERE rnk <= 5
-        """,
-        "ann_topk_bucketed": f"""
-            WITH {_EMB_CTE},
-            b AS (
-              SELECT vec_id, v, nrm,
-                     {_hyperplane_bucket_sql()} AS bucket
-              FROM n
-            ),
-            q AS (SELECT * FROM b WHERE vec_id < 8),
-            scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) AS cos
-              FROM q JOIN b c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
             ),
             r AS (SELECT *, row_number() OVER (PARTITION BY query_id
                                 ORDER BY cos DESC, neighbor_id ASC) AS rnk
@@ -3003,17 +2834,9 @@ def oracle_sql() -> dict[str, str]:
             SELECT query_id, neighbor_id, cos, CAST(rnk AS INT) AS rank
             FROM r WHERE rnk <= 5
         """,
-        "ann_topk_directed": f"""
-            -- query-directed multi-probe (Lv et al.) over affinity-centered
-            -- bits: 37 probes ranked by Σ margin² of flipped bits
-            WITH {_EMB_CTE},
-            {_directed_cte_sql()}
-            SELECT query_id, neighbor_id, cos, rank FROM ddir
-        """,
         "ann_recall": f"""
-            -- recall@5 of the bucketed and IVF(nprobe=2) paths vs brute
-            -- force: the three chains above composed, then two 1-row
-            -- set-intersection counts
+            -- recall@5 of the IVF(nprobe=2) path vs brute force: the two
+            -- chains above composed, then a 1-row set-intersection count
             WITH {_EMB_CTE},
             ex_scored AS (
               SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -3026,39 +2849,6 @@ def oracle_sql() -> dict[str, str]:
                 SELECT *, row_number() OVER (PARTITION BY query_id
                              ORDER BY cos DESC, neighbor_id ASC) AS rnk
                 FROM ex_scored
-              ) WHERE rnk <= 5
-            ),
-            bk AS (SELECT vec_id, v, nrm,
-                          {_hyperplane_bucket_sql()} AS bucket
-                   FROM n),
-            bk_scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) AS cos
-              FROM (SELECT * FROM bk WHERE vec_id < 8) q
-              JOIN bk c ON c.bucket = q.bucket AND c.vec_id <> q.vec_id
-            ),
-            buck AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY cos DESC, neighbor_id ASC) AS rnk
-                FROM bk_scored
-              ) WHERE rnk <= 5
-            ),
-            -- multi-probe radius 2: the mask-explode equi-join is
-            -- equivalent to the hamming<=2 predicate on bucket keys
-            mp_scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     round(list_dot_product(q.v, c.v) / (q.nrm * c.nrm), 6) AS cos
-              FROM (SELECT * FROM bk WHERE vec_id < 8) q
-              JOIN bk c ON bit_count(xor(CAST(c.bucket AS BIGINT),
-                                         CAST(q.bucket AS BIGINT))) <= 2
-                       AND c.vec_id <> q.vec_id
-            ),
-            mp AS (
-              SELECT query_id, neighbor_id FROM (
-                SELECT *, row_number() OVER (PARTITION BY query_id
-                             ORDER BY cos DESC, neighbor_id ASC) AS rnk
-                FROM mp_scored
               ) WHERE rnk <= 5
             ),
             cset AS (SELECT vec_id AS cid, list_transform(v, x -> x / nrm) AS cv
@@ -3099,43 +2889,15 @@ def oracle_sql() -> dict[str, str]:
                 FROM iscored
               ) WHERE rnk <= 5
             ),
-            {_directed_cte_sql()},
             tot AS (SELECT count(*) AS n_exact FROM exact)
-            SELECT 'bucketed' AS method,
-                   CAST((SELECT count(*) FROM buck
+            SELECT 'ivf_nprobe2' AS method,
+                   CAST((SELECT count(*) FROM ivf
                          JOIN exact USING (query_id, neighbor_id)) AS BIGINT)
                      AS n_hits,
                    CAST(n_exact AS BIGINT) AS n_exact,
-                   round((SELECT count(*) FROM buck
-                          JOIN exact USING (query_id, neighbor_id))
-                         * 1.0 / n_exact, 6) AS recall
-            FROM tot
-            UNION ALL
-            SELECT 'bucketed_mp2',
-                   CAST((SELECT count(*) FROM mp
-                         JOIN exact USING (query_id, neighbor_id)) AS BIGINT),
-                   CAST(n_exact AS BIGINT),
-                   round((SELECT count(*) FROM mp
-                          JOIN exact USING (query_id, neighbor_id))
-                         * 1.0 / n_exact, 6)
-            FROM tot
-            UNION ALL
-            SELECT 'ivf_nprobe2',
-                   CAST((SELECT count(*) FROM ivf
-                         JOIN exact USING (query_id, neighbor_id)) AS BIGINT),
-                   CAST(n_exact AS BIGINT),
                    round((SELECT count(*) FROM ivf
                           JOIN exact USING (query_id, neighbor_id))
-                         * 1.0 / n_exact, 6)
-            FROM tot
-            UNION ALL
-            SELECT 'directed_mp37',
-                   CAST((SELECT count(*) FROM (SELECT query_id, neighbor_id FROM ddir) d
-                         JOIN exact USING (query_id, neighbor_id)) AS BIGINT),
-                   CAST(n_exact AS BIGINT),
-                   round((SELECT count(*) FROM (SELECT query_id, neighbor_id FROM ddir) d
-                          JOIN exact USING (query_id, neighbor_id))
-                         * 1.0 / n_exact, 6)
+                         * 1.0 / n_exact, 6) AS recall
             FROM tot
         """,
         # pinned VALUES golden for the sf0.01 tables (the correctness

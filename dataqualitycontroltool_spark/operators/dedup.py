@@ -866,9 +866,10 @@ def embedding_cosine_pairs(
 ) -> DataFrame:
     """All pairs with cosine similarity >= threshold: (id_a, id_b, cos).
 
-    Brute-force O(n²) pair scan — the *exactness oracle*.  At 10^12 rows use
-    ``similarity.bucketed_topk``-style sign-LSH bucketing to prefilter, then
-    verify with this same cosine expression.
+    Brute-force O(n²) pair scan — the *exactness oracle*.  At 10^12 rows
+    prefilter with the IVF cluster assignment of ``similarity.ivf_topk``
+    (``similarity.cluster_assign``), then verify with this same cosine
+    expression.
 
     Plan shape: the b-side is broadcast and the a-side explicitly
     repartitioned to ``n_partitions`` (default: the cluster's

@@ -1,6 +1,6 @@
 """Approximate-nearest-neighbor search over an embedding column
-(``array<float>``) — brute-force cosine top-k as the exactness baseline, a
-sign-LSH bucketed variant as the scale path.
+(``array<float>``) — brute-force cosine top-k as the exactness baseline, IVF
+(inverted file over k-means centroids) as the sublinear scale path.
 
 The reference has no vector search; its closest analogue is the CDE
 nearest-neighbor match (``model/qcfrictionless/cde.py:43-69``: rank every
@@ -12,15 +12,15 @@ Design for 10^12 rows:
   is never shuffled for brute force (map-side broadcast-nested-loop, then a
   per-query top-k via window over (corpus-partition-local) candidates —
   Spark's TakeOrderedAndProject keeps only k rows per partition in flight).
-* the bucketed variant replaces the cross join with an equi-join on a
-  sign-bit bucket key: corpus is hash-partitioned by bucket, each query
-  probes exactly one bucket (or its multi-probe neighbors), turning O(n·q)
-  into O(n·q / 2^bits) with recall traded for bits.
+* IVF replaces the cross join with an equi-join on the nearest-centroid id:
+  cluster assignment is one Arrow-batched BLAS argmax per batch
+  (:func:`cluster_assign`, shared with :func:`semantic_dedup`), and each
+  query ranks only the lists of its ``nprobe`` nearest centroids.
 * all ranking is on ``round(cos, 6)`` with id ascending as tie-break, so
   results replay identically on any engine (DuckDB oracle included).
 
-Math is double-precision end-to-end (float32 inputs are cast once before
-any join) inside Catalyst lambda expressions — no UDF, whole-stage codegen.
+Cosine math is double-precision end-to-end (float32 inputs are cast once
+before any join) inside Catalyst lambda expressions.
 """
 
 from __future__ import annotations
@@ -128,7 +128,7 @@ def cosine_pairs_blocked(
     pairs are emitted as (min_id, max_id) — cosine is symmetric.  Scale
     note: work is O(n²d / B²) per task with B² tasks — tune ``n_blocks`` so
     a block (~n/B vectors) fits executor memory; brute force is for corpus
-    slices / verification, the sublinear path is ``bucketed_topk``."""
+    slices / verification, the sublinear path is ``ivf_topk``."""
 
     def gen(it):
         import numpy as np
@@ -168,52 +168,6 @@ def cosine_pairs_blocked(
     return pairs.mapInPandas(gen, "id_a long, id_b long, cos double")
 
 
-def hyperplanes(dim: int, n_bits: int = 8, seed: int = 42) -> list[list[float]]:
-    """Seeded random-hyperplane directions for sign-LSH, as plain Python
-    lists (rounded to 6 decimals so the same constants inline exactly into
-    Spark literals and oracle SQL): ``n_bits`` standard-normal vectors of
-    length ``dim`` from numpy's seeded default_rng."""
-    import numpy as np
-
-    H = np.random.default_rng(seed).standard_normal((n_bits, dim))
-    return [[round(float(x), 6) for x in row] for row in H]
-
-
-def sign_bucket(
-    vec_col: Column, n_bits: int = 8, dim: int | None = None, seed: int = 42
-) -> Column:
-    """Deterministic sign-LSH bucket key, packed into an int.
-
-    With ``dim`` set (the production path): bit i = sign of the dot product
-    with a SEEDED dense hyperplane (:func:`hyperplanes`) — random-hyperplane
-    LSH whose collision probability is 1 - angle/pi per bit regardless of
-    how the embedding dimensions are distributed.  The planes inline as
-    Catalyst array literals, so the whole key is one codegen'd projection
-    (no UDF, no shuffle) and replays exactly in SQL engines (sequential-
-    fold dot product on both sides).
-
-    Without ``dim``: sign bits of the first ``n_bits`` dimensions — kept as
-    the zero-knowledge fallback, but embeddings with correlated leading
-    dimensions hash badly (round-1 review); prefer the seeded planes."""
-    if dim is not None:
-        planes = hyperplanes(dim, n_bits, seed)
-        bits = [
-            F.when(
-                dot(vec_col, F.array(*[F.lit(x) for x in h])) >= 0, F.lit(1 << i)
-            ).otherwise(F.lit(0))
-            for i, h in enumerate(planes)
-        ]
-    else:
-        bits = [
-            F.when(F.element_at(vec_col, i + 1) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-            for i in range(n_bits)
-        ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("int")
-
-
 def quantize_int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Symmetric per-vector int8 scalar quantization: (id, scale, qvec).
 
@@ -221,8 +175,6 @@ def quantize_int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     256B/row); int8 + one float scale is 68B — a 3.7× cut with bounded
     error (|x - deq(x)| <= scale/2, scale = max|x|/127).  Pure Catalyst
     expressions (let-bound scale), columnar end to end."""
-    from dataqualitycontroltool_spark.operators.dedup import let
-
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
     def build(vv: Column) -> Column:
@@ -258,13 +210,19 @@ def kmeans_centroids(
     """Seeded spherical k-means on a bounded driver-side sample — the IVF
     coarse quantizer.  The sample is the ``sample`` lowest ids (deterministic,
     not rand()); at 10^12 rows a bounded sample is exactly how IVF training
-    works in practice (the quantizer sees a few thousand vectors)."""
+    works in practice (the quantizer sees a few thousand vectors).
+
+    ``k`` is clamped to the sample size, so a corpus smaller than ``k``
+    yields one centroid per vector; an empty corpus raises ``ValueError``."""
     import numpy as np
 
     q = df.select(vec_col) if id_col is None else df.orderBy(id_col).select(vec_col)
     rows = q.limit(sample).collect()
+    if not rows:
+        raise ValueError(f"kmeans_centroids: no vectors in column {vec_col!r} to train on")
     X = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
     X = X / np.linalg.norm(X, axis=1, keepdims=True).clip(min=1e-12)
+    k = min(k, len(X))
     rng = np.random.default_rng(seed)
     C = X[rng.choice(len(X), size=k, replace=False)]
     for _ in range(iters):
@@ -297,8 +255,6 @@ def ivf_topk(
     Arrow batch, numpy/BLAS speed, and the corpus join is a plain equi-join
     on the cluster id (hash-partitioned, no skew for balanced quantizers)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
     C = centroids if centroids is not None else kmeans_centroids(
         df, vec_col, k=n_centroids, id_col=id_col
@@ -416,235 +372,6 @@ def semantic_dedup(
         e.select(id_col, "cluster")
         .join(losers, on=id_col, how="left")
         .select(id_col, "cluster", F.col("_loser").isNull().alias("keep"))
-    )
-
-
-def _probe_masks(n_bits: int, probe_hamming: int) -> list[int]:
-    """All XOR masks within ``probe_hamming`` bit flips of zero — the
-    multi-probe neighborhood (sum of C(n_bits, i) for i <= radius)."""
-    from itertools import combinations
-
-    masks = []
-    for r in range(probe_hamming + 1):
-        for bits in combinations(range(n_bits), r):
-            m = 0
-            for b in bits:
-                m |= 1 << b
-            masks.append(m)
-    return masks
-
-
-def bucketed_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_ids: list,
-    k: int = 5,
-    n_bits: int = 8,
-    dim: int | None = None,
-    seed: int = 42,
-    probe_hamming: int = 0,
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's sign-LSH
-    bucket.  Output (query_id, neighbor_id, cos, rank) — the recall/latency
-    trade is 2^n_bits× fewer comparisons; the equi-join on the bucket key
-    hash-partitions the corpus so each bucket is one co-located task
-    (md5-free integer key, uniform for zero-centered embeddings).  Pass
-    ``dim`` to bucket with seeded hyperplanes (see :func:`sign_bucket`).
-
-    ``probe_hamming`` > 0 enables multi-probe LSH (Lv et al. 2007, "Multi-
-    Probe LSH"): each query additionally probes every bucket within that
-    many bit flips of its own — Σ C(n_bits, i) probes — trading candidate
-    volume back for recall WITHOUT giving up the equi-join: the probe set
-    expands on the (tiny, broadcast) query side via explode, the corpus
-    side never changes.  A sign bit near zero margin is exactly the bit
-    most likely to differ on a true neighbor, so recall climbs steeply
-    with radius (measured on the sf0.01 corpus: 0.0 → 0.325 → 0.65 for
-    radius 0/2/3 at 8 bits; the `ann_recall` query pins the curve)."""
-    e = _prepared(df, id_col, vec_col).withColumn(
-        "bucket", sign_bucket(F.col("v"), n_bits, dim=dim, seed=seed)
-    )
-    q = e.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        F.col("bucket").alias("qb"),
-    )
-    if probe_hamming > 0:
-        masks = _probe_masks(n_bits, probe_hamming)
-        q = q.withColumn(
-            "qb",
-            F.explode(
-                F.array(*[F.col("qb").bitwiseXOR(F.lit(m)) for m in masks])
-            ),
-        )
-    c = e.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cn"),
-        F.col("bucket"),
-    )
-    cos = F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
-    scored = (
-        c.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qb")) & (F.col("query_id") != F.col("neighbor_id")),
-        )
-        .select("query_id", "neighbor_id", cos.alias("cos"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
-
-
-def centroid_norms(centroids_raw: list[list[float]]) -> list[float]:
-    """Euclidean norms of raw centroid rows via a SEQUENTIAL left-fold sum
-    (plain Python floats, not numpy's pairwise reduction) so the constant
-    replays bit-identically against DuckDB's ``sqrt(list_dot_product(v,v))``
-    and Spark's ``sqrt(aggregate(v, 0.0, acc + x*x))`` — all three are the
-    same IEEE mul-add chain."""
-    import math
-
-    out = []
-    for row in centroids_raw:
-        s = 0.0
-        for x in row:
-            s += float(x) * float(x)
-        out.append(math.sqrt(s))
-    return out
-
-
-def _affinity_struct(
-    v: Column, norm: Column, centroids_raw: list[list[float]], cnorms: list[float]
-) -> Column:
-    """Struct ``(bucket int, marg array<double>)`` of *affinity-centered*
-    LSH bits: a_i = cos(v, c_i), margin_i = a_i − mean_j(a_j), bit i set
-    when margin_i >= 0.
-
-    Random hyperplanes carry almost no locality on near-uniform embeddings
-    (measured: single-probe recall 0.0, radius-2 0.325 on the sf0.01
-    corpus); centering each row's centroid-affinity profile instead makes
-    bit i mean "closer to centroid i than this row's average centroid" — a
-    data-aware code that is still ONE codegen'd projection (the centroid
-    literals inline, the affinity array is let-bound so its 8 dot-folds run
-    once per row) and derives in plain SQL from the same table (the oracle
-    recomputes c_i and the mean in CTEs).  The mean is a left-assoc chained
-    sum / n — the exact textual order the SQL twin uses, so margins are
-    bit-identical doubles on both engines."""
-    n_bits = len(centroids_raw)
-    aff = F.array(
-        *[
-            dot(v, F.array(*[F.lit(float(x)) for x in c])) / (norm * F.lit(cn))
-            for c, cn in zip(centroids_raw, cnorms)
-        ]
-    )
-
-    def build(arr: Column) -> Column:
-        mu = F.element_at(arr, 1)
-        for i in range(1, n_bits):
-            mu = mu + F.element_at(arr, i + 1)
-        mu = mu / F.lit(float(n_bits))
-
-        def with_mu(m: Column) -> Column:
-            margins = [F.element_at(arr, i + 1) - m for i in range(n_bits)]
-            bucket = F.lit(0)
-            for i, mg in enumerate(margins):
-                bucket = bucket + F.when(mg >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-            return F.struct(
-                bucket.cast("int").alias("bucket"), F.array(*margins).alias("marg")
-            )
-
-        return let(mu, with_mu)
-
-    return let(aff, build)
-
-
-def directed_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_ids: list,
-    k: int = 5,
-    centroids_raw: list[list[float]] | None = None,
-    probe_budget: int = 37,
-) -> DataFrame:
-    """Query-directed multi-probe ANN (Lv et al. 2007 §4.5, "query-directed
-    probing") over affinity-centered LSH bits: instead of probing every
-    bucket within a fixed hamming radius, each query ranks ALL 2^n_bits XOR
-    masks by the likelihood the true neighbor hides behind that flip —
-    score(mask) = Σ_{i∈mask} margin_i² (a bit near its decision boundary is
-    cheap to flip; a confident bit is expensive) — and probes only the
-    ``probe_budget`` best.  At the SAME 37-probe budget as fixed radius-2
-    this lifts measured recall@5 0.325 → 0.700 on the sf0.01 corpus
-    (fixed-r2 on the same affinity bits: 0.575 — both levers contribute).
-
-    Scale shape (10^12 rows): the corpus side stays a pure projection (the
-    bucket key is 8 inlined dot-folds, no UDF, no shuffle); the probe
-    expansion happens ONLY on the broadcast query side (queries ×
-    2^n_bits rows, scored and pruned to ``probe_budget`` with a window over
-    the tiny frame), and the candidate fetch is the same hash-partitioned
-    equi-join on the int bucket key as single-probe.  Ranking replays in
-    SQL: probe scores round to 6 decimals with mask-ascending ties, cosine
-    ranking is round-6 with id-ascending ties.
-
-    ``centroids_raw`` are RAW (un-normalized) centroid vectors; their norms
-    are folded sequentially (:func:`centroid_norms`) so affinities are
-    bit-identical across engines."""
-    if centroids_raw is None:
-        raise ValueError("directed_topk requires centroids_raw")
-    n_bits = len(centroids_raw)
-    cnorms = centroid_norms(centroids_raw)
-    e = _prepared(df, id_col, vec_col).withColumn(
-        "_aff", _affinity_struct(F.col("v"), F.col("norm"), centroids_raw, cnorms)
-    )
-    q = e.where(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        F.col("_aff.bucket").alias("qb"),
-        F.col("_aff.marg").alias("marg"),
-    )
-    spark = df.sparkSession
-    masks = spark.range(1 << n_bits).select(F.col("id").cast("int").alias("mask"))
-    score = None
-    for i in range(n_bits):
-        m = F.element_at(F.col("marg"), i + 1)
-        term = F.when(
-            F.col("mask").bitwiseAND(F.lit(1 << i)) != 0, m * m
-        ).otherwise(F.lit(0.0))
-        score = term if score is None else score + term
-    pw = Window.partitionBy("query_id").orderBy(
-        F.col("_pscore").asc(), F.col("mask").asc()
-    )
-    probes = (
-        q.crossJoin(F.broadcast(masks))
-        .withColumn("_pscore", F.round(score, 6))
-        .withColumn("_pr", F.row_number().over(pw))
-        .where(F.col("_pr") <= probe_budget)
-        .select(
-            "query_id", "qv", "qn",
-            F.col("qb").bitwiseXOR(F.col("mask")).alias("qb"),
-        )
-    )
-    c = e.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cn"),
-        F.col("_aff.bucket").alias("bucket"),
-    )
-    cos = F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
-    scored = c.join(
-        F.broadcast(probes),
-        (F.col("bucket") == F.col("qb")) & (F.col("query_id") != F.col("neighbor_id")),
-    ).select("query_id", "neighbor_id", cos.alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
     )
 
 

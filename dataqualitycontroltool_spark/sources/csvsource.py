@@ -6,25 +6,27 @@ qcfrictionless/qctable.py:29-49`): open as utf-8-sig (BOM stripped),
 extraction; headers sanitized to identifier-safe names
 (`qctable.py:153-156`, `qcschema.py:189-198` → specs.sanitize_header).
 
-Spark split of responsibilities: the SNIFF is driver-side on a few KB (the
-reference reads the same head sample), while the SCAN is the distributed
-``spark.read.csv`` with the sniffed dialect — Spark's parallel CSV reader
-splits the file by byte ranges, so a 100TB CSV ingests wide.  All columns
-load as raw strings (the reference's semantics — validation/inference are
-defined on raw cells); the validation plan or ``TableSpec`` casting decides
-types downstream."""
+Spark split of responsibilities: the SNIFF and the header row are
+driver-side on a few KB (the reference reads the same head sample), while
+the SCAN is the distributed ``spark.read.csv`` with the sniffed dialect and
+an explicit all-string schema — Spark's parallel CSV reader splits the file
+by byte ranges, so a 100TB CSV ingests wide, and no job runs until the
+frame is used.  All columns load as raw strings (the reference's semantics —
+validation/inference are defined on raw cells); the validation plan or
+``TableSpec`` casting decides types downstream."""
 
 from __future__ import annotations
 
 import codecs as _codecs
 import csv as _csv
-import io
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from dataqualitycontroltool_spark.specs import sanitize_header
 
 _SNIFF_BYTES = 64 * 1024
+_JAVA_TRIM = "".join(map(chr, range(33)))  # what String.trim strips
 
 
 def _head_file(path: str) -> str:
@@ -75,14 +77,26 @@ def sniff_dialect(path: str, sample_bytes: int = _SNIFF_BYTES) -> dict:
 
 
 def read_headers(path: str, dialect: dict) -> list[str]:
-    """Raw header row (driver-side, first line only)."""
+    """Raw header row (driver-side): the first line that is not blank, as
+    Spark's CSV reader skips lines that Java's ``trim`` empties."""
     with open(path, encoding=dialect["encoding"], newline="") as f:
-        reader = _csv.reader(
-            io.StringIO(f.readline()),
-            delimiter=dialect["delimiter"],
-            quotechar=dialect["quotechar"],
-        )
-        return next(reader)
+        line = next((ln for ln in f if ln.strip(_JAVA_TRIM)), "")
+    reader = _csv.reader([line], delimiter=dialect["delimiter"], quotechar=dialect["quotechar"])
+    return next(reader, [])
+
+
+def _spark_column_names(raw: list[str], header: bool) -> list[str]:
+    """The names Spark's CSV reader gives a file whose first row is ``raw``
+    (``CSVUtils.makeSafeHeader``): ``_c{i}`` without a header or for an
+    empty name, ``{name}{i}`` for a name repeated case-insensitively."""
+    if not header:
+        return [f"_c{i}" for i in range(len(raw))]
+    lower = [n.lower() for n in raw]
+    dup = {n for n in lower if lower.count(n) > 1}
+    return [
+        f"_c{i}" if n == "" else f"{n}{i}" if n.lower() in dup else n
+        for i, n in enumerate(raw)
+    ]
 
 
 def read_csv(
@@ -98,12 +112,16 @@ def read_csv(
 
     The first row is the header by default — the reference always reads one
     (`qctable.py:40-44`); the sniffer's has_header guess is exposed via
-    :func:`sniff_dialect` for callers handling headerless exports.  Note
-    Spark's reader itself suffixes byte-identical duplicate headers (a→a0,
-    a1); :func:`_dedupe` handles the collisions *sanitization* introduces."""
+    :func:`sniff_dialect` for callers handling headerless exports.  The
+    schema comes from the driver-side header row named the way Spark's
+    reader names it (case-insensitive duplicates a→a0, a1; empty → _c{i}),
+    so building the frame runs no job; :func:`_dedupe` handles the
+    collisions *sanitization* introduces."""
     d = sniff_dialect(path)
+    names = _spark_column_names(read_headers(_head_file(path), d), header)
     reader = (
-        spark.read.option("header", str(header).lower())
+        spark.read.schema(StructType([StructField(n, StringType()) for n in names]))
+        .option("header", str(header).lower())
         .option("sep", d["delimiter"])
         .option("quote", d["quotechar"])
         .option("encoding", "UTF-8")

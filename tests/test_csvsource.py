@@ -53,6 +53,32 @@ def test_read_csv_duplicate_headers_suffixed(spark, write):
     assert df.columns == ["a0", "a1", "a_b", "a_b_1"]
 
 
+@pytest.mark.parametrize("content,bom,want", [
+    ("a,a,a-b,a b\n1,2,3,4\n", False, ["a0", "a1", "a_b", "a_b_1"]),
+    ("Name,name,NAME,x\n1,2,3,4\n", False, ["Name0", "name1", "NAME2", "x"]),
+    (",b,,d\n1,2,3,4\n", False, ["_c0", "b", "_c2", "d"]),
+    ("id,name,id\n1,2,3\n", True, ["id0", "name", "id2"]),
+    ("\n  \nid,name\n1,2\n", False, ["id", "name"]),
+], ids=["duplicate", "case_duplicate", "empty", "bom", "blank_lines"])
+def test_read_csv_runs_no_job_and_names_like_spark(spark, write, content, bom, want):
+    """The schema comes from the driver-side header row, so building the
+    frame starts no Spark job.  The expected names are the ones Spark's own
+    header inference gives these files (case-insensitive duplicates take
+    their index, empty names become _c{i}, a BOM is stripped, leading blank
+    lines are skipped), then sanitized and deduped."""
+    p = write("h.csv", content, bom=bom)
+    sc = spark.sparkContext
+    group = "read_csv-no-job"
+    sc.setJobGroup(group, "read_csv header")
+    try:
+        df = csvsource.read_csv(spark, p)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert df.columns == want
+    assert [tuple(r) for r in df.collect()] == [tuple(str(i) for i in range(1, len(want) + 1))]
+
+
 def test_ragged_rows_permissive(spark, write):
     p = write("ragged.csv", "a,b,c\n1,2,3\n4,5\n6,7,8,9\n")
     df = csvsource.read_csv(spark, p)
