@@ -5,21 +5,30 @@ per-partition lineage + metrics").
 The driver runs the input table's pending partitions concurrently, each as
 its own small Spark job, from a bounded thread pool.  The input may be a
 parquet directory (the sandbox stand-in, partitioned by ``part``) or a
-catalog (Iceberg) table ref — see ``graft/io.py``; on a real cluster the
-partition list comes from Iceberg snapshot metadata, not a data scan:
+catalog (Iceberg) table ref — see ``graft/io.py``.  Everything that does not
+depend on the partition is done once per call:
 
+* **one read, one partition list** — the corpus is read once; that frame
+  feeds the dedup index, the partition list and every partition query.  For
+  a path the partition list is a FileSystem listing of the ``part=N``
+  directories, for Iceberg the snapshot metadata: no data scan, no job.
 * **step 0** — the global exact-dup index (phash → keeper) is computed once
   and persisted; every partition job reuses it, so resumed runs produce
-  byte-identical keep/drop decisions to a single-shot run.
-* **per partition** — filter the corpus (read once per call) to that
-  partition (partition pruning: the ``part = N`` filter reaches the parquet
-  scan), run the pipeline, write ``out/part=N``, then commit one lineage
-  marker ``_manifest/part-N.json`` (partition, rows in/kept/dropped, scrub
-  counts, drop-reason counts, wall seconds).  The lineage row comes from an
-  ``Observation`` on the write itself (``pipeline.lineage_columns``), so it
-  costs no job of its own.  Each partition's marker is written only AFTER
-  that partition's output commits, so a crash mid-partition re-runs exactly
-  that partition on resume.
+  byte-identical keep/drop decisions to a single-shot run.  A freshly written
+  index is read back under the schema it was written with (no schema job).
+* **one plan** — ``run_pipeline`` over the whole corpus and the lineage
+  aggregate are built once per call (a plan build is hundreds of py4j round
+  trips on the driver, so building one per partition grows with the
+  partition count).
+* **per partition** — that plan filtered to ``part = N`` (Catalyst pushes the
+  filter through the UDF projection and the broadcast join into the scan's
+  partition filters, so each job reads only its own partition), written to
+  ``out/part=N``, then one lineage marker ``_manifest/part-N.json``
+  (partition, rows in/kept/dropped, scrub counts, drop-reason counts, wall
+  seconds).  The lineage row comes from an ``Observation`` on the write
+  itself (``pipeline.lineage_columns``), so it costs no job of its own.  Each
+  partition's marker is written only AFTER that partition's output commits,
+  so a crash mid-partition re-runs exactly that partition on resume.
 * **concurrency** — one partition job has about one task per input file,
   so one job at a time leaves most executor cores idle.  Up to
   ``min(pending, defaultParallelism, _MAX_CONCURRENT_PARTITIONS)``
@@ -44,6 +53,7 @@ import json
 import logging
 import time
 import warnings
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -105,13 +115,29 @@ def ensure_dedup_index(
     spark: SparkSession, in_path: str, out_path: str, cfg: KeepDropConfig
 ) -> DataFrame | None:
     """Step 0: global dedup index, itself checkpointed."""
+    return _dedup_index(spark, lambda: read_corpus(spark, in_path), out_path, cfg)
+
+
+def _dedup_index(
+    spark: SparkSession,
+    corpus: Callable[[], DataFrame],
+    out_path: str,
+    cfg: KeepDropConfig,
+) -> DataFrame | None:
+    """The dedup index under ``out_path``, built from ``corpus()`` and
+    written first unless a committed one is there.  A fresh index is read
+    back under the schema of the frame just written, which skips the parquet
+    schema-inference job; a committed one (a resumed call) is read as is,
+    since building the frame to learn its schema may itself run a job (the
+    hamming index's hot-bucket detection)."""
     if not cfg.dedupe_on:
         return None
     idx_path = _join(out_path, DEDUP_DIR)
-    if not gio.fs_exists(spark, _join(idx_path, "_SUCCESS")):
-        idx = build_dedup_index(read_corpus(spark, in_path), cfg)
-        idx.write.mode("overwrite").parquet(idx_path)
-    return spark.read.parquet(idx_path)
+    if gio.fs_exists(spark, _join(idx_path, "_SUCCESS")):
+        return spark.read.parquet(idx_path)
+    idx = build_dedup_index(corpus(), cfg)
+    idx.write.mode("overwrite").parquet(idx_path)
+    return spark.read.schema(idx.schema).parquet(idx_path)
 
 
 def _pool_size(n_pending: int, default_parallelism: int) -> int:
@@ -146,25 +172,27 @@ def run_resumable(
     the first failure in partition order is raised."""
     cfg = cfg or KeepDropConfig()
     done = read_manifest(out_path, spark)
-    idx = ensure_dedup_index(spark, in_path, out_path, cfg)
-
-    # in_path may be a parquet directory or a catalog (Iceberg) table ref;
-    # for Iceberg the partition list comes from snapshot metadata, not a scan
-    pending = [p for p in corpus_partitions(spark, in_path) if p not in done]
+    corpus = read_corpus(spark, in_path)
+    pending = [p for p in corpus_partitions(spark, in_path, df=corpus)
+               if p not in done]
     if max_partitions is not None:
         pending = pending[:max_partitions]
+    if not pending:
+        return []
 
-    corpus = read_corpus(spark, in_path)
+    idx = _dedup_index(spark, lambda: corpus, out_path, cfg)
+    filtered = run_pipeline(corpus, cfg, dedup=idx)
+    lineage = lineage_columns()
 
     def write_partition(part: int) -> dict:
         t0 = time.perf_counter()
-        result = run_pipeline(corpus.where(F.col("part") == part), cfg, dedup=idx)
         # observe() is the last operator before the sink, so the lineage row
         # is aggregated inside the write's own result stage (each task
         # counted once) and obs.get returns only after the output commits
         obs = Observation()
         (
-            result.drop("part").observe(obs, *lineage_columns())
+            filtered.where(F.col("part") == part).drop("part")
+            .observe(obs, *lineage)
             .write.mode("overwrite")
             .parquet(_join(out_path, f"part={part}"))
         )
@@ -173,8 +201,6 @@ def run_resumable(
         _commit_manifest(spark, out_path, row)
         return row
 
-    if not pending:
-        return []
     workers = _pool_size(len(pending), spark.sparkContext.defaultParallelism)
     # each submission is wrapped on this thread, so every partition runs
     # with its own copy of the caller's local properties: Spark sets the

@@ -11,11 +11,15 @@ catalog table on a cluster:
   otherwise.  Partition-pruning filters (``part = N``) push down in both
   cases (Iceberg prunes from snapshot metadata; parquet from hive-style
   directory layout).
-* ``corpus_partitions(spark, src)`` — the distinct ``part`` values.  For a
-  catalog ref it first tries the Iceberg ``<tbl>.partitions`` metadata table
-  (no data-file scan — at 10^12 rows a distinct over the data is a full
-  scan; the metadata table is O(#partitions)), falling back to a distinct
-  scan for non-Iceberg catalog tables (e.g. temp views in tests).
+* ``corpus_partitions(spark, src)`` — the ``part`` values, without a data
+  scan wherever the layout allows.  For a path it lists the ``part=N``
+  directories through the Hadoop FileSystem (O(#partitions) metadata calls,
+  no Spark job), counting a directory only when it holds a data file — the
+  rule Spark's own partition discovery applies.  For a catalog ref it tries
+  the Iceberg ``<tbl>.partitions`` metadata table (O(#partitions) as well).
+  Only a non-Iceberg catalog table (e.g. a temp view in tests) or a path that
+  is not laid out by partition falls back to a distinct scan over the data,
+  which at 10^12 rows is a full scan.
 
 Output stays a parquet directory (``part=N``) + one ``_manifest/part-N.json``
 marker per partition: the manifest is the resume protocol's source of truth
@@ -51,9 +55,17 @@ def read_corpus(spark: SparkSession, src: str) -> DataFrame:
     return spark.read.parquet(src)
 
 
-def corpus_partitions(spark: SparkSession, src: str, col: str = "part") -> list[int]:
-    """Distinct partition values, cheapest available way (see module doc)."""
-    if is_table_ref(src):
+def corpus_partitions(
+    spark: SparkSession, src: str, col: str = "part", df: DataFrame | None = None
+) -> list[int]:
+    """Sorted partition values, cheapest available way (see module doc).
+    ``df`` is the corpus already read from ``src``, used by the distinct-scan
+    fallback instead of reading it again."""
+    if not is_table_ref(src):
+        listed = _listed_partitions(spark, src, col)
+        if listed is not None:
+            return listed
+    else:
         try:
             # Iceberg metadata table: partition spec values without a data scan
             rows = (
@@ -71,11 +83,32 @@ def corpus_partitions(spark: SparkSession, src: str, col: str = "part") -> list[
                 "corpus_partitions: %s.partitions metadata table unavailable "
                 "(%s); falling back to a distinct scan over the data", src, exc
             )
-    df = read_corpus(spark, src)
+    df = df if df is not None else read_corpus(spark, src)
     return [
         int(r[col])
         for r in df.select(col).distinct().orderBy(col).collect()
     ]
+
+
+def _listed_partitions(spark: SparkSession, src: str, col: str) -> list[int] | None:
+    """``col=N`` values of the directories under ``src`` that hold at least
+    one data file, from a Hadoop FileSystem listing; None when ``src`` has no
+    ``col=`` directory (a file, a glob, an unpartitioned directory)."""
+    fs, p = _hadoop_fs(spark, src)
+    if not fs.exists(p) or not fs.getFileStatus(p).isDirectory():
+        return None
+    prefix = f"{col}="
+    dirs = [st.getPath() for st in fs.listStatus(p)
+            if st.isDirectory() and st.getPath().getName().startswith(prefix)]
+    if not dirs:
+        return None
+    # Spark's partition discovery, too, ignores a directory whose files all
+    # start with "_" or "." (_SUCCESS, .part-0.crc)
+    return sorted(
+        int(d.getName()[len(prefix):]) for d in dirs
+        if any(st.isFile() and not st.getPath().getName().startswith(("_", "."))
+               for st in fs.listStatus(d))
+    )
 
 
 # --------------------------------------------------------------------------

@@ -116,9 +116,11 @@ def read_csv(
     schema comes from the driver-side header row named the way Spark's
     reader names it (case-insensitive duplicates a→a0, a1; empty → _c{i}),
     so building the frame runs no job; :func:`_dedupe` handles the
-    collisions *sanitization* introduces."""
+    collisions those positional names (a,a0,a → a0,a0,a2) and sanitization
+    introduce."""
     d = sniff_dialect(path)
-    names = _spark_column_names(read_headers(_head_file(path), d), header)
+    # deduped here: a schema with a duplicate name fails before any rename
+    names = _dedupe(_spark_column_names(read_headers(_head_file(path), d), header))
     reader = (
         spark.read.schema(StructType([StructField(n, StringType()) for n in names]))
         .option("header", str(header).lower())
@@ -136,15 +138,18 @@ def read_csv(
 
 
 def _dedupe(names: list[str]) -> list[str]:
-    """Suffix duplicate sanitized names (a_1, a_2, ...) — Spark rejects
-    duplicate column names where the reference tolerated them."""
-    seen: dict[str, int] = {}
+    """Suffix duplicate names (a_1, a_2, ...) — Spark rejects duplicate
+    column names where the reference tolerated them.  Names compare
+    case-insensitively, as Spark resolves them, and a suffix never takes a
+    name already in use."""
+    taken = {n.lower() for n in names}
+    seen: set[str] = set()
     out = []
     for n in names:
-        if n in seen:
-            seen[n] += 1
-            out.append(f"{n}_{seen[n]}")
-        else:
-            seen[n] = 0
-            out.append(n)
+        name, i = n, 0
+        while name.lower() in seen or (i and name.lower() in taken):
+            i += 1
+            name = f"{n}_{i}"
+        seen.add(name.lower())
+        out.append(name)
     return out

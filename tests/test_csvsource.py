@@ -79,6 +79,23 @@ def test_read_csv_runs_no_job_and_names_like_spark(spark, write, content, bom, w
     assert [tuple(r) for r in df.collect()] == [tuple(str(i) for i in range(1, len(want) + 1))]
 
 
+@pytest.mark.parametrize("content,sanitize,want", [
+    ("a,a0,a,b\n1,2,3,4\n", True, ["a0", "a0_1", "a2", "b"]),
+    ("a,a0,a,b\n1,2,3,4\n", False, ["a0", "a0_1", "a2", "b"]),
+    ("A,a0,a,b\n1,2,3,4\n", True, ["A0", "a0_1", "a2", "b"]),
+    ("a b,A-b\n1,2\n", True, ["a_b", "A_b_1"]),
+], ids=["positional_collision", "positional_collision_raw", "case_collision",
+        "sanitized_case_collision"])
+def test_read_csv_name_collisions_get_unique_names(spark, write, content, sanitize, want):
+    """Spark names a repeated header by position, which can collide with
+    another header (a,a0,a → a0,a0,a2), and Spark resolves names
+    case-insensitively: every such collision still reads, with names unique
+    without regard to case."""
+    df = csvsource.read_csv(spark, write("c.csv", content), sanitize_headers=sanitize)
+    assert df.columns == want
+    assert [tuple(r) for r in df.collect()] == [tuple(str(i) for i in range(1, len(want) + 1))]
+
+
 def test_ragged_rows_permissive(spark, write):
     p = write("ragged.csv", "a,b,c\n1,2,3\n4,5\n6,7,8,9\n")
     df = csvsource.read_csv(spark, p)
