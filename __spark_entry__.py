@@ -2172,10 +2172,10 @@ def oracle_sql() -> dict[str, str]:
         # an independent numpy aggregation re-derives them in pytest
         "image_channel_stats": """
             SELECT * FROM (VALUES (
-              CAST(200 AS BIGINT), CAST(6 AS BIGINT), CAST(615936 AS BIGINT),
-              CAST(0.493903 AS DOUBLE), CAST(0.497223 AS DOUBLE),
-              CAST(0.498781 AS DOUBLE), CAST(0.231924 AS DOUBLE),
-              CAST(0.231236 AS DOUBLE), CAST(0.231486 AS DOUBLE)
+              CAST(200 AS BIGINT), CAST(9 AS BIGINT), CAST(610880 AS BIGINT),
+              CAST(0.494962 AS DOUBLE), CAST(0.494672 AS DOUBLE),
+              CAST(0.498743 AS DOUBLE), CAST(0.231518 AS DOUBLE),
+              CAST(0.232027 AS DOUBLE), CAST(0.231188 AS DOUBLE)
             )) AS t(n_images, n_failed, n_pixels,
                     mean_r, mean_g, mean_b, std_r, std_g, std_b)
         """,
@@ -3034,21 +3034,21 @@ def oracle_sql() -> dict[str, str]:
             SELECT query_id, neighbor_id, CAST(cos AS DOUBLE) AS cos,
                    CAST(rank AS INT) AS rank
             FROM (VALUES
-              (-3935540273100291955, 901145921115135718, 0.98455, 1),
-              (-3935540273100291955, -4828028533620169290, 0.981893, 2),
-              (-3935540273100291955, 2400261009366995973, 0.981856, 3),
-              (270102132368357668, -5735816544083265112, 0.977356, 1),
-              (270102132368357668, -3533924863889313969, 0.97108, 2),
-              (270102132368357668, -2143089236363039232, 0.969764, 3),
-              (2031237952976197850, 2000907208380158881, 0.999998, 1),
-              (2031237952976197850, 6636323190065753081, 0.999998, 2),
-              (2031237952976197850, 7002236087568307818, 0.999998, 3),
-              (7293735252013572727, 1213328989295720623, 0.988629, 1),
-              (7293735252013572727, 4069635291514073957, 0.98728, 2),
-              (7293735252013572727, 3957949020534582403, 0.985058, 3),
-              (8666302260683541950, -4499732116674518608, 0.986357, 1),
-              (8666302260683541950, -3533924863889313969, 0.983174, 2),
-              (8666302260683541950, -372234996828606012, 0.978805, 3)
+              (-3935540273100291955, 754828460234415826, 0.999997, 1),
+              (-3935540273100291955, 3838570215895468505, 0.999997, 2),
+              (-3935540273100291955, 8715125446352192862, 0.999997, 3),
+              (-752447118330332615, 3340677359270373417, 0.970446, 1),
+              (-752447118330332615, 6050013060396108039, 0.966963, 2),
+              (-752447118330332615, 7525626918687165708, 0.965164, 3),
+              (2031237952976197850, -1700535344242886395, 0.981677, 1),
+              (2031237952976197850, 6125954471326822441, 0.978667, 2),
+              (2031237952976197850, -5845745981538901763, 0.974942, 3),
+              (7293735252013572727, -5894112514761526928, 0.989105, 1),
+              (7293735252013572727, -9213829466915773751, 0.983726, 2),
+              (7293735252013572727, -638338796706907381, 0.975122, 3),
+              (8666302260683541950, 267209748108606439, 0.982989, 1),
+              (8666302260683541950, -1557379487676733887, 0.975697, 2),
+              (8666302260683541950, -3421052178348918175, 0.97386, 3)
             ) AS t(query_id, neighbor_id, cos, rank)
         """,
         # pinned VALUES golden: the binary DICOM decode has no SQL twin, but

@@ -57,8 +57,6 @@ def main() -> None:
         "queries": timings,
         "graft": _graft_throughput(spark, cpus),
         "graft_hamming": _graft_hamming(spark),
-        "graft_real_jpeg": _graft_real_jpeg(spark),
-        "graft_real_webp": _graft_real_webp(spark),
         "dicom_10k": _dicom_scale(spark),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": cpus,
@@ -126,21 +124,23 @@ def _dicom_scale(spark, n_files: int = 10_000) -> dict:
             "invalid_seqs": counts["invalidsequences"]}
 
 
-def _timed_graft(spark, rows: int, out_tag: str, cfg=None, **write_kwargs) -> dict:
-    """Shared graft-throughput harness: build the corpus once per boot
-    (cached on disk), spawn the Python UDF worker fleet with a 25%
-    warm-up pass, then time ONE full pipeline write.  All graft metrics
-    (stub, hamming, real-JPEG, real-WebP) share this shape so a change to
-    the warm-up or timing discipline lands everywhere at once."""
+def _timed_graft(spark, rows: int, out_tag: str, cfg=None) -> dict:
+    """Shared graft-throughput harness: build the corpus (genuine PNG, JPEG
+    and VP8L bitstreams) once per boot (cached on disk), spawn the Python
+    UDF worker fleet with a 25% warm-up pass, then time ONE full pipeline
+    write.  Both graft metrics (exact and hamming dedup) share this shape
+    so a change to the warm-up or timing discipline lands everywhere at
+    once."""
     from pyspark.sql import functions as F
 
     from dataqualitycontroltool_spark.graft.pipeline import run_pipeline
     from dataqualitycontroltool_spark.graft.synth import write_images
 
-    tag = "".join(f"_{k}" for k in sorted(write_kwargs)) or ""
-    path = f"/tmp/dqc_bench_images{tag}_{rows}"
+    # not the dqc_bench_images_* name of corpora written before every
+    # jpeg/webp row was a genuine bitstream: those must not be reused
+    path = f"/tmp/dqc_bench_corpus_{rows}"
     if not os.path.exists(f"{path}/_SUCCESS"):
-        write_images(spark, path, rows, n_partitions=32, **write_kwargs)
+        write_images(spark, path, rows, n_partitions=32)
     df = spark.read.parquet(path)
     n = df.count()
     warm = df.where(F.pmod(F.xxhash64("image_id"), F.lit(4)) == 0)
@@ -165,23 +165,6 @@ def _graft_hamming(spark, rows: int = 8000) -> dict:
     from dataqualitycontroltool_spark.graft.pipeline import KeepDropConfig
 
     return _timed_graft(spark, rows, "ham", cfg=KeepDropConfig(dedupe_hamming=3))
-
-
-def _graft_real_jpeg(spark, rows: int = 4000) -> dict:
-    """Same pipeline over a corpus where every jpeg row (~35% of rows) is a
-    GENUINE baseline T.81/JFIF bitstream decoded by the built-in numpy
-    codec — the honest cost of real-bitstream decode through the Spark
-    plumbing, reported separately so the main graft number stays comparable
-    across rounds (stub codec, unchanged input)."""
-    return _timed_graft(spark, rows, "rj", real_jpeg_frac=1.0)
-
-
-def _graft_real_webp(spark, rows: int = 4000) -> dict:
-    """Same pipeline over a corpus where every webp row (~15% of rows) is a
-    GENUINE lossless RIFF/VP8L bitstream decoded by the built-in numpy
-    codec (graft/vp8l.py) — the real-WebP twin of _graft_real_jpeg, new in
-    r4 with the VP8L codec."""
-    return _timed_graft(spark, rows, "rw", real_webp_frac=1.0)
 
 
 def _graft_throughput(spark, cpus: int, rows: int = 8000) -> dict:

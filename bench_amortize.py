@@ -36,7 +36,7 @@ def timed_run(spark, rows: int, hamming: int) -> dict:
     )
     from dataqualitycontroltool_spark.graft.synth import write_images
 
-    path = f"/tmp/dqc_bench_images_{rows}"
+    path = f"/tmp/dqc_bench_corpus_{rows}"  # the corpus bench.py writes
     if not os.path.exists(f"{path}/_SUCCESS"):
         write_images(spark, path, rows, n_partitions=32)
     df = spark.read.parquet(path)

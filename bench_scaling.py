@@ -146,7 +146,9 @@ def main() -> None:
     # fresh-dataset run as contended
     load_pre = os.getloadavg()[0]
 
-    marker = Path(DATA) / f"_ROWS_{args.rows}_64-192"
+    # the marker names the codec set, so a corpus written when jpeg/webp
+    # rows could be stand-in streams is regenerated, not reused
+    marker = Path(DATA) / f"_ROWS_{args.rows}_64-192_genuine"
     if not marker.exists():
         generate(args.rows)
         marker.touch()

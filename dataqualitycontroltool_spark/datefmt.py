@@ -89,7 +89,7 @@ DATE_PATTERNS: list[tuple[str, str]] = [
     ("%B{sep}%d{sep}%Y", rf"^\b{_MON_CHARS}{{3,15}}{_SEP_NAME}{_DAY}(?P=sep){_YEAR4}\b$"),
 ]
 
-_COMPILED = [(tpl, re.compile(rx, flags=re.UNICODE)) for tpl, rx in DATE_PATTERNS]
+_DATE_REGEXES = [(tpl, re.compile(rx, flags=re.UNICODE)) for tpl, rx in DATE_PATTERNS]
 
 
 def infer_date_format(value: str) -> str | None:
@@ -97,7 +97,7 @@ def infer_date_format(value: str) -> str | None:
 
     Only 4-digit years are accepted (the reference requires len(year)==4).
     """
-    for tpl, rx in _COMPILED:
+    for tpl, rx in _DATE_REGEXES:
         m = rx.match(str(value))
         if m and len(m.group("year")) == 4:
             return tpl.format(sep=m.group("sep"))

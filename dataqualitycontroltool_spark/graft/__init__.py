@@ -6,8 +6,8 @@ The reference tool's profiling-and-validation logic
 `model/qctypes/*.py`) re-expressed as a keep/drop + scrub pipeline over
 ``(image_id, bytes, w, h, fmt, caption, phash)`` rows:
 
-* :mod:`codecs`      — stdlib image codecs (real PNG via zlib; deterministic
-                       quantization codec standing in for lossy JPEG/WebP),
+* :mod:`codecs`      — one codec per image format (PNG; baseline JPEG,
+                       :mod:`jpeg`; lossless VP8L WebP, :mod:`vp8l`),
                        PSNR, perceptual hash.
 * :mod:`synth`       — deterministic seeded generator for the input table.
 * :mod:`langid`      — character-trigram language ID (fastText stand-in).

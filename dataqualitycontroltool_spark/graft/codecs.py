@@ -1,25 +1,17 @@
 """Image codecs and pixel metrics — pure stdlib + numpy, executor-safe.
 
-The container ships no imaging library (no PIL/opencv/libjpeg), so:
+One codec per format, each writing and reading genuine bitstreams that any
+standard reader accepts:
 
-* ``png``  — a REAL minimal PNG codec (RGB8, zlib, filter types 0-4 on
-  decode, filter 0 on encode).  Output is readable by any PNG reader.
-* ``jpeg`` — TWO paths: a REAL baseline T.81/JFIF codec in pure numpy
-  (`graft/jpeg.py` — genuine bitstreams, readable by any JPEG decoder) for
-  any stream starting with the SOI marker, and a DETERMINISTIC STAND-IN
-  (uniform quantization step ``LOSSY_STEP`` + zlib, magic ``QJPG``) that
-  remains the synthetic-data default for bench continuity.  Both preserve
-  the property the pipeline verifies (decode(encode(x)) ≈ x with
-  PSNR ≥ 40 dB, see BASELINE.json input_hint).
-* ``webp`` — TWO paths as well: a REAL lossless VP8L codec in pure
-  numpy (`graft/vp8l.py` — genuine RIFF/WEBP bitstreams, readable by any
-  WebP decoder) for streams with the VP8L chunk, and the deterministic
-  stand-in (magic ``QWBP``) as the synthetic-data default.  Lossy VP8
-  streams remain out of scope (PIL path gated behind an import-try).
-
-The Spark-side plumbing (binary column, Arrow-batched decode UDF, PSNR
-validation, dimension checks) is real and tested; for JPEG the bitstream
-path is real as well.
+* ``png``  — a minimal PNG codec (RGB8, zlib, filter types 0-4 on decode,
+  filter 0 on encode).
+* ``jpeg`` — baseline T.81/JFIF (`graft/jpeg.py`), encoded at
+  ``JPEG_QUALITY`` (≥ 43 dB round trip even on pure noise, so the
+  pipeline's decoded-pixel PSNR ≥ 40 dB check holds, see BASELINE.json
+  input_hint).
+* ``webp`` — lossless VP8L in a RIFF/WEBP container (`graft/vp8l.py`).
+  Lossy VP8 and extended VP8X streams are not decoded: ``decode`` raises
+  ValueError, which the pipeline records as ``decode_ok=false``.
 
 Reference parity: the decode/dimension/PSNR checks play the role of the
 reference's DICOM pixel & metadata validation
@@ -33,16 +25,9 @@ import zlib
 
 import numpy as np
 
-try:  # real codecs if ever available; the sandbox has none
-    from PIL import Image  # noqa: F401
+from dataqualitycontroltool_spark.graft import jpeg, vp8l
 
-    HAVE_PIL = True
-except ImportError:
-    HAVE_PIL = False
-
-LOSSY_STEP = 4  # quantization step → MSE≈step²/12 → PSNR≈46.9 dB (≥40 target)
-JPEG_QUALITY = 98  # real-codec quality: ≥43 dB round-trip even on pure noise
-LOSSY_FORMATS = ("jpeg", "webp")
+JPEG_QUALITY = 98  # ≥43 dB round-trip even on pure noise
 ALL_FORMATS = ("png", "jpeg", "webp")
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -134,91 +119,14 @@ def png_decode(data: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic lossy stand-in ("jpeg"/"webp" stubs)
-# ---------------------------------------------------------------------------
-
-_LOSSY_MAGIC = {"jpeg": b"QJPG", "webp": b"QWBP"}
-
-
-def lossy_encode(rgb: np.ndarray, fmt: str) -> bytes:
-    """STUB lossy codec: uniform quantization (step LOSSY_STEP) + zlib.
-
-    Deterministic, PSNR ≈ 46.9 dB vs the source — stands in for real
-    JPEG/WebP until an imaging library is available (``HAVE_PIL``).
-    """
-    h, w, _ = rgb.shape
-    q = (rgb.astype(np.int32) // LOSSY_STEP * LOSSY_STEP + LOSSY_STEP // 2).clip(
-        0, 255
-    ).astype(np.uint8)
-    header = _LOSSY_MAGIC[fmt] + struct.pack(">IIB", w, h, LOSSY_STEP)
-    return header + zlib.compress(q.tobytes(), 6)
-
-
-def lossy_roundtrip(rgb: np.ndarray) -> np.ndarray:
-    """decode(encode(x)) for the STUB lossy codec without the zlib pass:
-    zlib is lossless, so the round-trip equals the quantization step alone —
-    ~2× cheaper PSNR validation.  Only valid for the stub; with a real codec
-    (HAVE_PIL) callers must do the full encode/decode."""
-    return (
-        (rgb.astype(np.int32) // LOSSY_STEP * LOSSY_STEP + LOSSY_STEP // 2)
-        .clip(0, 255)
-        .astype(np.uint8)
-    )
-
-
-def lossy_decode(data: bytes, fmt: str) -> np.ndarray:
-    magic = _LOSSY_MAGIC[fmt]
-    if data[:4] != magic:
-        raise ValueError(f"not a {fmt} (stub) stream")
-    w, h, _step = struct.unpack(">IIB", data[4:13])
-    raw = np.frombuffer(zlib.decompress(data[13:]), np.uint8)
-    return raw.reshape(h, w, 3)
-
-
-# ---------------------------------------------------------------------------
 # Unified encode/decode + metrics
 # ---------------------------------------------------------------------------
-
-def pil_decode(data: bytes) -> np.ndarray:  # pragma: no cover — no PIL here
-    """Decode a REAL image bitstream (JPEG/WebP/PNG...) via PIL to an
-    (h, w, 3) uint8 RGB array.  Only reachable when ``HAVE_PIL``."""
-    from io import BytesIO
-
-    return np.asarray(Image.open(BytesIO(data)).convert("RGB"))
-
-
-def pil_roundtrip(rgb: np.ndarray, fmt: str, quality: int = 95) -> np.ndarray:  # pragma: no cover
-    """Real-codec encode+decode round trip via PIL (the honest PSNR check
-    the stub's ``lossy_roundtrip`` stands in for)."""
-    from io import BytesIO
-
-    buf = BytesIO()
-    Image.fromarray(rgb).save(buf, format=fmt.upper(), quality=quality)
-    return pil_decode(buf.getvalue())
-
-
-def encode(rgb: np.ndarray, fmt: str) -> bytes:
-    if fmt == "png":
-        return png_encode(rgb)
-    if fmt in LOSSY_FORMATS:
-        return lossy_encode(rgb, fmt)
-    raise ValueError(f"unknown format {fmt!r}")
-
-
-def is_lossless_webp(head: bytes) -> bool:
-    """True for a RIFF/WEBP container whose first chunk is VP8L (lossless).
-    Callers pass the first 16 bytes; lossy VP8 / extended VP8X return
-    False and take the real-round-trip PSNR path."""
-    from dataqualitycontroltool_spark.graft import vp8l
-
-    return vp8l.is_vp8l(head)
-
 
 def webp_encode(
     rgb: np.ndarray, cache_bits: int = 6, predictor_bits: int = 0,
     palette: bool | str = "auto",
 ) -> bytes:
-    """Encode a REAL lossless WebP (RIFF/VP8L) bitstream (pure numpy).
+    """Encode a lossless WebP (RIFF/VP8L) bitstream (pure numpy).
 
     ``predictor_bits`` (opt-in) enables the PREDICTOR transform: ~25%
     smaller and faster to ENCODE on natural images, but its inverse is a
@@ -233,8 +141,6 @@ def webp_encode(
     indices invert as one vectorized table lookup); true-color images
     (every image in the synthetic bench corpus) are unaffected, keeping
     prior-round bitstreams byte-identical."""
-    from dataqualitycontroltool_spark.graft import vp8l
-
     if palette == "auto":
         # pack RGB into one uint32 so the distinct-color probe is a 1-D
         # np.unique (~70x faster than axis=0 row dedup — the probe runs on
@@ -252,78 +158,49 @@ def webp_encode(
     return vp8l.encode(rgb, cache_bits=cache_bits, predictor_bits=predictor_bits)
 
 
-def webp_roundtrip(rgb: np.ndarray) -> np.ndarray:
-    """decode(encode(x)) through the REAL VP8L codec — exact identity
-    (lossless), pinned by tests/test_vp8l.py."""
-    from dataqualitycontroltool_spark.graft import vp8l
-
-    return vp8l.decode(vp8l.encode(rgb))
-
-
-def jpeg_encode(rgb: np.ndarray, quality: int = JPEG_QUALITY) -> bytes:
-    """Encode a REAL baseline T.81/JFIF JPEG bitstream (pure numpy)."""
-    from dataqualitycontroltool_spark.graft import jpeg
-
-    return jpeg.encode(rgb, quality)
-
-
 def jpeg_roundtrip(rgb: np.ndarray, quality: int = JPEG_QUALITY) -> np.ndarray:
-    """decode(encode(x)) through the REAL JPEG codec — the honest lossy
-    fidelity loop for genuine JFIF bitstreams.  Computed in the transform
-    domain (entropy coding is lossless, so the round-trip image is fully
-    determined before Huffman): bit-identical to the full bitstream loop —
-    pinned in tests/test_jpeg.py::test_quant_roundtrip_equals_bitstream."""
-    from dataqualitycontroltool_spark.graft import jpeg
-
+    """decode(encode(x)) through the JPEG codec — the lossy fidelity loop.
+    Computed in the transform domain (entropy coding is lossless, so the
+    round-trip image is fully determined before Huffman): bit-identical to
+    the full bitstream loop — pinned in
+    tests/test_jpeg.py::test_quant_roundtrip_equals_bitstream."""
     return jpeg.quant_roundtrip(rgb, quality)
 
 
-def decode(data: bytes, fmt: str) -> np.ndarray:
-    """Decode a bitstream: the real PNG codec for png; for the lossy
-    formats, the stub stream when its magic matches; a genuine JFIF stream
-    (SOI marker) via the built-in T.81 decoder, falling back to PIL for
-    shapes it scopes out (progressive/subsampled); real WebP needs PIL
-    (explicit error without it, never silent garbage)."""
+def encode(rgb: np.ndarray, fmt: str) -> bytes:
     if fmt == "png":
-        return png_decode(data)
-    if fmt in LOSSY_FORMATS:
-        if data[:4] == _LOSSY_MAGIC[fmt]:
-            return lossy_decode(data, fmt)
-        if fmt == "jpeg" and data[:2] == b"\xff\xd8":
-            from dataqualitycontroltool_spark.graft import jpeg
-
-            try:
-                return jpeg.decode(data)
-            except Exception as exc:
-                # malformed headers can surface as struct.error/IndexError/
-                # KeyError from the parser; the fallback and the documented
-                # error contract must cover them all, not just ValueError
-                if HAVE_PIL:
-                    return pil_decode(data)  # pragma: no cover — no PIL here
-                if isinstance(exc, ValueError):
-                    raise
-                raise ValueError(f"malformed JPEG stream: {exc}") from exc
-        if fmt == "webp" and data[:4] == b"RIFF":
-            from dataqualitycontroltool_spark.graft import vp8l
-
-            if vp8l.is_vp8l(bytes(data[:16])):
-                try:
-                    return vp8l.decode(bytes(data))
-                except Exception as exc:
-                    # the built-in decoder covers the full lossless
-                    # feature set libwebp emits (all four transforms,
-                    # meta prefix codes, color cache), so this fallback
-                    # only fires for genuinely malformed streams
-                    if HAVE_PIL:
-                        return pil_decode(data)  # pragma: no cover — no PIL
-                    if isinstance(exc, ValueError):
-                        raise
-                    raise ValueError(f"malformed VP8L stream: {exc}") from exc
-            # RIFF but not VP8L: lossy VP8 / extended VP8X need PIL
-        if HAVE_PIL:
-            return pil_decode(data)  # pragma: no cover — no PIL here
-        raise ValueError(f"real {fmt} bitstream but no codec library (PIL)")
+        return png_encode(rgb)
+    if fmt == "jpeg":
+        return jpeg.encode(rgb, JPEG_QUALITY)
+    if fmt == "webp":
+        return webp_encode(rgb)
     raise ValueError(f"unknown format {fmt!r}")
+
+
+def decode(data: bytes, fmt: str) -> np.ndarray:
+    """Decode a bitstream with its format's codec.  A stream that codec
+    does not read (lossy VP8 or extended VP8X WebP, progressive or
+    subsampled JPEG, a truncated or corrupt stream) raises ValueError —
+    never silent garbage."""
+    if fmt == "png":
+        decoder, name = png_decode, "PNG"
+    elif fmt == "jpeg":
+        decoder, name = jpeg.decode, "JPEG"
+    elif fmt == "webp":
+        if not vp8l.is_vp8l(bytes(data[:16])):
+            raise ValueError("unsupported WebP stream: only lossless VP8L decodes")
+        decoder, name = vp8l.decode, "VP8L"
+    else:
+        raise ValueError(f"unknown format {fmt!r}")
+    try:
+        return decoder(bytes(data))
+    except ValueError:
+        raise
+    except Exception as exc:
+        # malformed headers can surface as struct.error/zlib.error/
+        # IndexError/KeyError from the parsers; the documented error
+        # contract covers them all
+        raise ValueError(f"malformed {name} stream: {exc}") from exc
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

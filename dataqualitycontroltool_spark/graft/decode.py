@@ -18,7 +18,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F, types as T
 
-from dataqualitycontroltool_spark.graft import codecs
+from dataqualitycontroltool_spark.graft import codecs, vp8l
 
 MIN_PSNR_DB = 40.0
 
@@ -41,27 +41,17 @@ def check_bytes(data: bytes | None, fmt: str | None) -> tuple[bool, int | None, 
     except Exception:
         return (False, None, None, None)
     h, w = img.shape[:2]
-    if fmt in codecs.LOSSY_FORMATS:
-        # stub stream: round-trip == quantization (zlib is lossless), so
-        # skip the compress/decompress pair; a REAL bitstream gets the
-        # genuine encode+decode loop (built-in T.81 codec for JPEG, PIL
-        # for WebP when present)
-        if bytes(data[:4]) == codecs._LOSSY_MAGIC[fmt]:
-            p = codecs.psnr(img, codecs.lossy_roundtrip(img))
-        elif fmt == "jpeg":
-            p = codecs.psnr(img, codecs.jpeg_roundtrip(img))
-        elif fmt == "webp" and codecs.is_lossless_webp(bytes(data[:16])):
-            # real VP8L is LOSSLESS: decode(encode(x)) == x exactly
-            # (pinned in tests/test_vp8l.py), so the round-trip is the
-            # identity and PSNR is inf by construction — no second decode.
-            # Guard on the VP8L chunk specifically: a lossy VP8 stream
-            # (PIL-decoded) must still pay the real round-trip below, or
-            # a degraded image would skip the PSNR >= 40 gate entirely
-            p = float("inf")
-        else:
-            p = codecs.psnr(img, codecs.pil_roundtrip(img, fmt))  # pragma: no cover
-    else:
+    if fmt == "jpeg":
+        p = codecs.psnr(img, codecs.jpeg_roundtrip(img))
+    elif fmt == "png" or vp8l.is_vp8l(bytes(data[:16])):
+        # LOSSLESS: decode(encode(x)) == x exactly (VP8L pinned in
+        # tests/test_vp8l.py), so PSNR is inf by construction — no second
+        # encode/decode
         p = float("inf")
+    else:
+        # a WebP that is not VP8L has no round trip here to check its
+        # fidelity against, so it must never pass the PSNR gate as lossless
+        return (False, None, None, None)
     return (True, int(w), int(h), float(min(p, 99.0)))
 
 

@@ -60,7 +60,11 @@ def corpus_partitions(
 ) -> list[int]:
     """Sorted partition values, cheapest available way (see module doc).
     ``df`` is the corpus already read from ``src``, used by the distinct-scan
-    fallback instead of reading it again."""
+    fallback instead of reading it again.
+
+    A null partition value (Spark writes it to ``col=__HIVE_DEFAULT_PARTITION__``)
+    is not supported: it raises ValueError naming ``col``, before any
+    partition is planned."""
     if not is_table_ref(src):
         listed = _listed_partitions(spark, src, col)
         if listed is not None:
@@ -73,7 +77,6 @@ def corpus_partitions(
                 .select(f"partition.{col}")
                 .collect()
             )
-            return sorted(int(r[col]) for r in rows)
         except Exception as exc:
             # not an Iceberg table (temp view, hive table) — or a transient
             # catalog error: either way the fallback is a full distinct scan
@@ -83,11 +86,25 @@ def corpus_partitions(
                 "corpus_partitions: %s.partitions metadata table unavailable "
                 "(%s); falling back to a distinct scan over the data", src, exc
             )
+        else:
+            return sorted(_partition_value(col, r[col]) for r in rows)
     df = df if df is not None else read_corpus(spark, src)
     return [
-        int(r[col])
+        _partition_value(col, r[col])
         for r in df.select(col).distinct().orderBy(col).collect()
     ]
+
+
+_NULL_PARTITION_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_value(col: str, value) -> int:
+    if value is None or value == _NULL_PARTITION_DIR:
+        raise ValueError(
+            f"corpus_partitions: column {col!r} has null partition values, "
+            "which are not supported"
+        )
+    return int(value)
 
 
 def _listed_partitions(spark: SparkSession, src: str, col: str) -> list[int] | None:
@@ -105,7 +122,7 @@ def _listed_partitions(spark: SparkSession, src: str, col: str) -> list[int] | N
     # Spark's partition discovery, too, ignores a directory whose files all
     # start with "_" or "." (_SUCCESS, .part-0.crc)
     return sorted(
-        int(d.getName()[len(prefix):]) for d in dirs
+        _partition_value(col, d.getName()[len(prefix):]) for d in dirs
         if any(st.isFile() and not st.getPath().getName().startswith(("_", "."))
                for st in fs.listStatus(d))
     )

@@ -4,16 +4,12 @@ Implements ITU-T T.81 (the public JPEG spec) baseline sequential DCT with
 JFIF framing: 8-bit samples, 4:4:4 (no chroma subsampling), the Annex K
 quantization tables scaled by the public IJG quality formula, and the
 Annex K.3 "typical" Huffman tables.  Output bitstreams are readable by any
-standard JPEG decoder (PIL, libjpeg, browsers); the decoder reads any
+standard JPEG decoder (libjpeg, browsers); the decoder reads any
 baseline 4:4:4 or grayscale JPEG (restart markers included).
 
-Why this exists: the container ships no imaging library, so the graft
-pipeline's lossy formats were previously validated only against a
-clearly-marked quantize+zlib stand-in (`codecs.lossy_encode`).  This module
-makes the BASELINE.json "decoded-pixel PSNR ≥ 40 dB for lossy formats"
-check honest for JPEG — a genuine T.81 bitstream, not a stub.  The stub
-remains the synthetic-data default for bench continuity; `codecs.decode`
-routes any real JFIF stream (SOI marker) here.
+This is the graft pipeline's one JPEG codec: `codecs.encode`/`codecs.decode`
+route every jpeg row here, and the BASELINE.json "decoded-pixel PSNR ≥ 40 dB
+for lossy formats" check runs against these bitstreams.
 
 Scope notes (explicit, erroring — never silent garbage):
 * encoder: 4:4:4 RGB or grayscale only (maximum fidelity; subsampling is a
@@ -713,8 +709,8 @@ def decode(data: bytes) -> np.ndarray:
                     )
                 k += 1
     if p > nbits:
-        # a truncated entropy stream must FAIL, matching the stub codec's
-        # zlib error on truncation — never silently return a half image
+        # a truncated entropy stream must FAIL — never silently return a
+        # half image
         raise ValueError("truncated JPEG entropy stream")
     coeffs = [
         np.array(cl, np.int32).reshape(n_blocks, 64) for cl in coeff_lists

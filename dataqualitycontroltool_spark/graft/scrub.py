@@ -39,14 +39,14 @@ def scrub_column(c: Column) -> Column:
     return out
 
 
-_COMPILED = [(re.compile(pat), repl) for _n, pat, repl in SCRUB_RULES]
+_SCRUB_REGEXES = [(re.compile(pat), repl) for _n, pat, repl in SCRUB_RULES]
 
 
 def scrub_text(s: str | None) -> str | None:
     """Pure-Python twin of :func:`scrub_column` (test oracle only)."""
     if s is None:
         return None
-    for rx, repl in _COMPILED:
+    for rx, repl in _SCRUB_REGEXES:
         s = rx.sub(repl, s)
     return s
 

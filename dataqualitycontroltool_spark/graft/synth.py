@@ -114,17 +114,20 @@ def _base_image(rng: np.random.Generator, w: int, h: int) -> np.ndarray:
 
 def generate_pdf(
     part: int, n_rows: int, seed: int = 42, w_range: tuple[int, int] = W_RANGE,
-    real_jpeg_frac: float = 0.0, real_webp_frac: float = 0.0,
+    real_jpeg_frac: float = 1.0, real_webp_frac: float = 1.0,
 ) -> pd.DataFrame:
     """One partition of the table as pandas — pure function of (part, n, seed).
     ``w_range`` sets generated image dimensions (multiples of 8): bench uses
-    larger images so per-row decode work dominates fixed costs.
-    ``real_jpeg_frac`` > 0 encodes that fraction of jpeg rows as GENUINE
-    baseline T.81/JFIF bitstreams (graft/jpeg.py) instead of the fast stub;
-    ``real_webp_frac`` does the same for webp rows with genuine lossless
-    RIFF/VP8L bitstreams (graft/vp8l.py).  Both default to 0.0 and then
-    draw no extra randomness, keeping the default corpus byte-identical to
-    prior rounds (bench continuity + pinned goldens)."""
+    larger images so per-row decode work dominates fixed costs.  Every image
+    is a genuine bitstream of its format's one codec (``codecs.encode``):
+    PNG, baseline T.81/JFIF JPEG, lossless RIFF/VP8L WebP.
+    ``real_jpeg_frac``/``real_webp_frac`` are accepted for callers that
+    still pass them and must be 1.0 (every jpeg/webp row is genuine)."""
+    if real_jpeg_frac != 1.0 or real_webp_frac != 1.0:
+        raise ValueError(
+            "generate_pdf: real_jpeg_frac and real_webp_frac must be 1.0 — "
+            "every jpeg/webp row is a genuine bitstream"
+        )
     rng = np.random.default_rng(seed * 1_000_003 + part)
     # per-partition near-dup cluster bases (cluster 0 shared-shape: same seed)
     base_rng = np.random.default_rng(seed)
@@ -149,12 +152,12 @@ def generate_pdf(
             img = _base_image(rng, w0, h0)
         h0, w0 = img.shape[:2]
 
-        if fmt == "jpeg" and real_jpeg_frac and rng.random() < real_jpeg_frac:
-            data = codecs.jpeg_encode(img)  # real JFIF bitstream
-        elif fmt == "webp" and real_webp_frac and rng.random() < real_webp_frac:
-            data = codecs.webp_encode(img)  # real lossless VP8L bitstream
-        else:
-            data = codecs.encode(img, fmt)
+        if fmt != "png":
+            # one draw per jpeg/webp row, unused, so that a seed keeps the
+            # random stream (and the corpus) it had when this draw chose
+            # the codec
+            rng.random()
+        data = codecs.encode(img, fmt)
         ph = codecs.phash64(img)
         w_meta, h_meta = w0, h0
 
@@ -198,8 +201,6 @@ def generate_images(
     n_partitions: int = DEFAULT_PARTITIONS,
     seed: int = 42,
     w_range: tuple[int, int] = W_RANGE,
-    real_jpeg_frac: float = 0.0,
-    real_webp_frac: float = 0.0,
 ) -> DataFrame:
     """Distributed generation: the driver ships only (part, count, seed) rows;
     executors synthesize pixels/captions via mapInPandas (Arrow-batched)."""
@@ -215,7 +216,7 @@ def generate_images(
         for pdf in batches:
             for _, row in pdf.iterrows():
                 yield generate_pdf(int(row["part"]), int(row["n"]), int(row["seed"]),
-                                   w_range, real_jpeg_frac, real_webp_frac)
+                                   w_range)
 
     return seeds.mapInPandas(gen, SCHEMA)
 
@@ -227,14 +228,11 @@ def write_images(
     n_partitions: int = DEFAULT_PARTITIONS,
     seed: int = 42,
     w_range: tuple[int, int] = W_RANGE,
-    real_jpeg_frac: float = 0.0,
-    real_webp_frac: float = 0.0,
 ) -> None:
     """Materialize the synthetic table partitioned by `part` (the Iceberg
     partition layout stand-in that checkpoint/resume iterates)."""
     (
-        generate_images(spark, n_rows, n_partitions, seed, w_range,
-                        real_jpeg_frac, real_webp_frac)
+        generate_images(spark, n_rows, n_partitions, seed, w_range)
         .write.mode("overwrite")
         .partitionBy("part")
         .parquet(path)

@@ -7,9 +7,9 @@ RIFF/WEBP container, VP8L signature + 14-bit dimension header, canonical
 DEFLATE-style prefix codes (length-limited by package-merge, Kraft-complete
 so strict decoders accept them), LZ77 backward references with the spec's
 distance-mapping table, the optional color cache, and the subtract-green
-transform.  This closes the last stand-in lossy-format gap from the r3
-verdict: ``fmt='webp'`` rows can now carry real WebP bitstreams (lossless,
-so the pipeline's PSNR >= 40 dB invariant holds with PSNR = inf).
+transform.  This is the graft pipeline's one WebP codec: ``fmt='webp'``
+rows carry these bitstreams (lossless, so the pipeline's PSNR >= 40 dB
+invariant holds with PSNR = inf).
 
 Encoder scope (a valid, conservative subset — every output is a conformant
 stream any WebP decoder reads):

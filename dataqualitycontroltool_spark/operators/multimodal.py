@@ -1,13 +1,12 @@
 """Multimodal columns — image / audio / video as opaque ``binary`` columns
 with typed metadata, processed by Arrow-batched pandas UDFs.
 
-Design (per task brief): the Spark-side plumbing — schemas, partitioning,
-UDF signatures, batch shapes — is REAL and tested; whatever the sandbox
-cannot decode for lack of codec libraries is either implemented from
-scratch (PNG + PCM-WAV are parsed for real; resize/features are real numpy)
-or stubbed behind a clearly-marked deterministic container format
-(``QVID`` video = our stub-lossy frames concatenated; see graft/codecs.py
-for the same policy on jpeg/webp).
+Design: the Spark-side plumbing — schemas, partitioning, UDF signatures,
+batch shapes — is REAL and tested.  Images go through graft/codecs.py, one
+genuine codec per format (PNG, baseline JPEG, lossless VP8L WebP); PCM-WAV
+is parsed for real; resize/features are real numpy.  Video has no real
+codec here, so it uses a clearly-marked deterministic container (``QVID``:
+length-prefixed baseline-JPEG frames).
 
 Reference lineage: the DICOM path (`/root/reference/mipqctool/model/mri/
 mridicom.py:33-45` header decode, `mrisequence.py:122-156` pixel checks) is
@@ -206,11 +205,11 @@ _QVID_MAGIC = b"QVID"
 
 def qvid_encode(frames: list[np.ndarray], fps: int = 8) -> bytes:
     """STUB video container: magic, fps, frame count, then length-prefixed
-    stub-lossy frames (graft/codecs.py lossy codec).  Deterministic; stands
-    in for mp4/webm until a real codec library is present — the SAMPLING
-    plumbing below (offset walk, every-k-th decode, mapInPandas explode)
-    is exactly what a real demuxer integration would use."""
-    payloads = [codecs.lossy_encode(f, "jpeg") for f in frames]
+    frames, each a baseline JPEG (``codecs.encode``).  Deterministic; stands
+    in for mp4/webm, for which no codec exists here — the SAMPLING plumbing
+    below (offset walk, every-k-th decode, mapInPandas explode) is exactly
+    what a real demuxer integration would use."""
+    payloads = [codecs.encode(f, "jpeg") for f in frames]
     out = [_QVID_MAGIC, struct.pack("<HI", fps, len(payloads))]
     for p in payloads:
         out.append(struct.pack("<I", len(p)))
@@ -257,7 +256,7 @@ def sample_frames(
                 b = bytes(data)
                 for i in range(0, len(offs), every_k):
                     off, ln = offs[i]
-                    frame = codecs.lossy_decode(b[off : off + ln], "jpeg")
+                    frame = codecs.decode(b[off : off + ln], "jpeg")
                     rows.append(
                         (vid, i, len(offs), fps,
                          bytearray(b[off : off + ln]),

@@ -204,6 +204,29 @@ def test_zero_row_partition_is_committed(spark, tmp_path):
     assert checkpoint.read_output(spark, out).count() == 100
 
 
+def test_null_partition_values_are_rejected_before_any_partition(spark, tmp_path):
+    """A null ``part`` (written to ``part=__HIVE_DEFAULT_PARTITION__``) is
+    not supported: the partition listing and the distinct-scan fallback
+    raise one ValueError naming the column, and ``run_resumable`` raises it
+    before any partition is planned, so no marker is written."""
+    from dataqualitycontroltool_spark.graft.io import corpus_partitions
+
+    in_path = str(tmp_path / "input")
+    corpus = synth.generate_images(spark, 40, 2, seed=42).withColumn(
+        "part", F.when(F.col("image_id").endswith("1"), None).otherwise(F.col("part")))
+    corpus.write.partitionBy("part").parquet(in_path)
+    spark.read.parquet(in_path).createOrReplaceTempView("null_part_v")
+    match = "column 'part' has null partition values, which are not supported"
+    for src in (in_path, "null_part_v"):
+        with pytest.raises(ValueError, match=match):
+            corpus_partitions(spark, src)
+
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=match):
+        checkpoint.run_resumable(spark, in_path, str(out), KeepDropConfig())
+    assert not (out / checkpoint.MANIFEST_DIR).exists()
+
+
 def test_pool_size():
     """Pool sizing is pure: bounded by the pending partitions, by the
     cluster's parallelism and by a fixed cap however many cores or

@@ -21,14 +21,11 @@ def test_png_roundtrip_lossless(img):
     assert np.array_equal(codecs.png_decode(codecs.png_encode(img)), img)
 
 
-@pytest.mark.parametrize("fmt", codecs.LOSSY_FORMATS)
+@pytest.mark.parametrize("fmt", ["jpeg", "webp"])
 def test_lossy_roundtrip_psnr(img, fmt):
     dec = codecs.decode(codecs.encode(img, fmt), fmt)
     assert dec.shape == img.shape
     assert codecs.psnr(img, dec) >= 40.0  # input_hint invariant
-    # idempotent: re-encoding the quantized image is lossless
-    dec2 = codecs.decode(codecs.encode(dec, fmt), fmt)
-    assert np.array_equal(dec, dec2)
 
 
 def test_encode_deterministic(img):
@@ -124,16 +121,14 @@ def test_scrub_duckdb_matches_python():
     assert got == [scrub.scrub_text(c) for c in caps]
 
 
-@pytest.mark.skipif(not codecs.HAVE_PIL, reason="PIL not installed — real-codec"
-                    " path validated whenever the environment provides it")
 def test_decode_check_real_jpeg_bitstream(spark):
-    # r2 verdict #8: the PSNR path against a GENUINE JPEG bitstream (the
-    # stub codecs only prove the plumbing).  Smooth gradient so quality-95
+    # the PSNR path against a JPEG bitstream from an independent encoder
+    # (runs wherever PIL is installed).  Smooth gradient so quality-95
     # JPEG stays well above the 40 dB bar.
     import pandas as pd
     from io import BytesIO
 
-    from PIL import Image
+    Image = pytest.importorskip("PIL.Image")
 
     from dataqualitycontroltool_spark.graft import decode as dec
 
@@ -143,7 +138,7 @@ def test_decode_check_real_jpeg_bitstream(spark):
     buf = BytesIO()
     Image.fromarray(img).save(buf, format="JPEG", quality=95)
     data = buf.getvalue()
-    assert data[:2] == b"\xff\xd8"  # real JPEG SOI, not the stub magic
+    assert data[:2] == b"\xff\xd8"  # JPEG SOI
 
     ok, w, h, psnr_db = dec.check_bytes(data, "jpeg")
     assert ok and (w, h) == (64, 64)
@@ -155,8 +150,8 @@ def test_decode_check_real_jpeg_bitstream(spark):
 
 
 def test_real_lossy_bitstream_error_paths():
-    # a corrupt "real" JPEG must raise (built-in T.81 decoder), and a real
-    # WebP without a codec library must raise — never silent garbage; and
+    # a corrupt JPEG must raise (T.81 decoder), and a lossy VP8 WebP, which
+    # no codec here reads, must raise — never silent garbage; and
     # check_bytes must map both to decode_ok=False
     from dataqualitycontroltool_spark.graft import decode as dec
 
@@ -164,8 +159,7 @@ def test_real_lossy_bitstream_error_paths():
     with pytest.raises(ValueError):
         codecs.decode(fake_real_jpeg, "jpeg")
     assert dec.check_bytes(fake_real_jpeg, "jpeg")[0] is False
-    real_webp = b"RIFF\x00\x00\x00\x00WEBPVP8 " + b"\x00" * 16
-    if not codecs.HAVE_PIL:
-        with pytest.raises(ValueError, match="no codec library"):
-            codecs.decode(real_webp, "webp")
-    assert dec.check_bytes(real_webp, "webp")[0] is False
+    lossy_webp = b"RIFF\x00\x00\x00\x00WEBPVP8 " + b"\x00" * 16
+    with pytest.raises(ValueError, match="only lossless VP8L"):
+        codecs.decode(lossy_webp, "webp")
+    assert dec.check_bytes(lossy_webp, "webp")[0] is False

@@ -69,6 +69,36 @@ def test_scrubbed_captions_exact(result_pdf, expected_pdf):
     assert same.all(), result_pdf[~same][["image_id", "caption_scrubbed"]].head(10)
 
 
+def _assert_kept_rows_decode(input_pdf, result_pdf, is_fmt, psnr_floor):
+    """Rows dropped by a cheaper rule short-circuit the decode, so the decode
+    assertions are on the kept rows of the format."""
+    ids = input_pdf.loc[is_fmt, "image_id"]
+    kept = result_pdf[result_pdf["keep"] & result_pdf["image_id"].isin(ids)]
+    assert len(kept) and bool(kept["decode_ok"].all())
+    assert bool((kept["psnr_db"] >= psnr_floor).all())
+
+
+def test_pipeline_on_real_jfif_bitstreams(input_pdf, result_pdf):
+    """Every default-corpus jpeg row is a baseline T.81/JFIF bitstream
+    (graft/jpeg.py); its kept rows decode green through the Spark pipeline
+    at PSNR >= 40 dB.  Keep/drop and caption parity on this corpus are
+    asserted by test_keep_drop_f1 and test_scrubbed_captions_exact."""
+    is_jpeg = input_pdf["fmt"] == "jpeg"
+    assert input_pdf.loc[is_jpeg, "bytes"].map(
+        lambda b: bytes(b[:2]) == b"\xff\xd8").all()
+    _assert_kept_rows_decode(input_pdf, result_pdf, is_jpeg, 40.0)
+
+
+def test_pipeline_on_real_vp8l_bitstreams(input_pdf, result_pdf):
+    """Every default-corpus webp row is a lossless RIFF/VP8L bitstream
+    (graft/vp8l.py); its kept rows decode green, lossless (PSNR inf, capped
+    at 99)."""
+    is_webp = input_pdf["fmt"] == "webp"
+    assert input_pdf.loc[is_webp, "bytes"].map(
+        lambda b: bytes(b[:4]) == b"RIFF" and bytes(b[12:16]) == b"VP8L").all()
+    _assert_kept_rows_decode(input_pdf, result_pdf, is_webp, 99.0)
+
+
 def test_labels_nontrivial(expected_pdf):
     """The synthetic dirtiness actually exercises every rule family."""
     kept = expected_pdf["keep"].mean()
@@ -153,60 +183,3 @@ def test_hamming_dedup_catches_near_dup_phashes(spark):
     d_ham = out_ham.where("is_dup").count()
     assert d_ham >= d_exact
     df.unpersist()
-
-
-def test_pipeline_on_real_jfif_bitstreams(spark):
-    """End-to-end keep/drop over a corpus where half the jpeg rows are
-    GENUINE baseline T.81/JFIF bitstreams (graft/jpeg.py), not the stub —
-    the real-decoder path exercised through the full Spark pipeline, with
-    exact parity vs the driver-side reference implementation."""
-    pdf = pd.concat(
-        [synth.generate_pdf(p, 100, seed=11, real_jpeg_frac=0.5) for p in range(2)],
-        ignore_index=True,
-    )
-    is_real = pdf["bytes"].apply(lambda b: bytes(b[:2]) == b"\xff\xd8")
-    assert is_real.sum() >= 10  # the real-codec rows actually exist
-    df = spark.createDataFrame(pdf, schema=synth.SCHEMA)
-    out = run_pipeline(df, KeepDropConfig(), n_partitions=4)
-    got = out.toPandas().sort_values("image_id").reset_index(drop=True)
-    exp = reference_labels(pdf, KeepDropConfig()).sort_values(
-        "image_id").reset_index(drop=True)
-    assert f1_score(got["keep"], exp["keep"]) == 1.0
-    assert (got["caption_scrubbed"].fillna("") == exp["caption_scrubbed"].fillna("")).all()
-    # intact, correctly-labeled real-JFIF rows must decode green (no PIL
-    # in this sandbox — this is the built-in T.81 decoder on executors)
-    real_ids = set(pdf.loc[(pdf["fmt"] == "jpeg") & pdf["bytes"].apply(
-        lambda b: bytes(b[:2]) == b"\xff\xd8" and bytes(b[-2:]) == b"\xff\xd9"),
-        "image_id"])
-    # (rows dropped by a cheaper rule legitimately short-circuit the decode,
-    # so assert on the kept real-JFIF rows — the decode actually ran there)
-    real_ok = got[got["image_id"].isin(real_ids) & got["keep"]]
-    assert len(real_ok) and bool(real_ok["decode_ok"].all())
-    assert bool((real_ok["psnr_db"] >= 40.0).all())
-
-
-def test_pipeline_on_real_vp8l_bitstreams(spark):
-    """End-to-end keep/drop over a corpus where every webp row is a GENUINE
-    lossless RIFF/VP8L bitstream (graft/vp8l.py), not the stub — exact
-    keep/drop + scrubbed-caption parity vs the driver-side reference, and
-    green decode (PSNR inf -> capped 99) on the kept real-webp rows."""
-    pdf = pd.concat(
-        [synth.generate_pdf(p, 100, seed=13, real_webp_frac=1.0) for p in range(2)],
-        ignore_index=True,
-    )
-    is_real = pdf["bytes"].apply(lambda b: bytes(b[:4]) == b"RIFF")
-    assert is_real.sum() >= 10  # real VP8L rows actually exist
-    df = spark.createDataFrame(pdf, schema=synth.SCHEMA)
-    out = run_pipeline(df, KeepDropConfig(), n_partitions=4)
-    got = out.toPandas().sort_values("image_id").reset_index(drop=True)
-    exp = reference_labels(pdf, KeepDropConfig()).sort_values(
-        "image_id").reset_index(drop=True)
-    assert f1_score(got["keep"], exp["keep"]) == 1.0
-    assert (got["caption_scrubbed"].fillna("") == exp["caption_scrubbed"].fillna("")).all()
-    real_ids = set(pdf.loc[(pdf["fmt"] == "webp") & pdf["bytes"].apply(
-        lambda b: bytes(b[:4]) == b"RIFF" and bytes(b[12:16]) == b"VP8L"),
-        "image_id"])
-    real_ok = got[got["image_id"].isin(real_ids) & got["keep"]]
-    assert len(real_ok) and bool(real_ok["decode_ok"].all())
-    # lossless: the PSNR floor is trivially satisfied (inf capped at 99)
-    assert bool((real_ok["psnr_db"] == 99.0).all())

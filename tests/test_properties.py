@@ -63,20 +63,6 @@ def test_png_roundtrip_exact(w, h, seed):
     assert np.array_equal(codecs.png_decode(codecs.png_encode(img)), img)
 
 
-@given(
-    st.integers(min_value=8, max_value=48),
-    st.integers(min_value=0, max_value=2**31 - 1),
-    st.sampled_from(["jpeg", "webp"]),
-)
-@settings(max_examples=25)
-def test_lossy_roundtrip_bounded_and_psnr(size, seed, fmt):
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, (size, size, 3), dtype=np.uint8)
-    back = codecs.lossy_decode(codecs.lossy_encode(img, fmt), fmt)
-    assert np.abs(back.astype(int) - img.astype(int)).max() <= codecs.LOSSY_STEP
-    assert codecs.psnr(img, back) >= 40.0  # the BASELINE invariant
-
-
 @given(st.dates(min_value=__import__("datetime").date(1900, 1, 1),
                 max_value=__import__("datetime").date(2099, 12, 31)),
        st.sampled_from(["%d/%m/%Y", "%Y-%m-%d", "%d-%m-%Y", "%m/%d/%Y"]))
@@ -94,18 +80,6 @@ def test_scrub_idempotent_and_total(s):
     once = scrub_text(s)
     assert scrub_text(once) == once  # replacement tokens never re-match
     assert scrub_text(None) is None
-
-
-@given(st.integers(min_value=8, max_value=48),
-       st.integers(min_value=0, max_value=2**31 - 1))
-@settings(max_examples=25)
-def test_lossy_roundtrip_shortcut_identical(size, seed):
-    """lossy_roundtrip (no zlib) must be bit-identical to the full
-    encode→decode of the stub codec."""
-    rng = np.random.default_rng(seed)
-    img = rng.integers(0, 256, (size, size, 3), dtype=np.uint8)
-    full = codecs.lossy_decode(codecs.lossy_encode(img, "jpeg"), "jpeg")
-    assert np.array_equal(codecs.lossy_roundtrip(img), full)
 
 
 @st.composite
