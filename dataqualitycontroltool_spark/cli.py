@@ -53,12 +53,13 @@ def cmd_validate(args) -> int:
         desc = frictionless_from_dc(desc)
     spec = TableSpec.from_descriptor(desc)
     df = _load_data(spark, args.data)
-    # ONE validation pass: report_tables caches the validated frame, and
-    # the profiles (write_report), the corrected CSV and every rendered
-    # format read that one cached frame, so the date-suggestion UDF runs
-    # once.  This command owns the cache and clears it at the end.  The
-    # sinks run 16 jobs plus one profile write per field (22 for a
-    # 6-field table at local[2]).
+    # ONE validation pass: report_tables caches the validated frame (a plan
+    # compiled to SQL text), and the profiles (write_report), the corrected
+    # CSV and every rendered format read that one cached frame, so the
+    # date-suggestion UDF runs once.  write_report submits its table and
+    # profile writes to a small thread pool.  This command owns the cache
+    # and clears it at the end.  The sinks run 16 jobs plus one profile
+    # write per field (22 for a 6-field table at local[2]).
     tables = reports.report_tables(df, spec)
     reports.write_report(df, spec, args.outdir, threshold=args.outlier,
                          tables=tables)

@@ -31,13 +31,13 @@ depend on the partition is done once per call:
   so a crash mid-partition re-runs exactly that partition on resume.
 * **concurrency** — one partition job has about one task per input file,
   so one job at a time leaves most executor cores idle.  Up to
-  ``min(pending, defaultParallelism, _MAX_CONCURRENT_PARTITIONS)``
-  partitions run at once; in pinned-thread mode (PySpark's default) each
-  worker thread inherits the caller's job group and local properties.  A
-  failing partition does not stop the others: every pending partition runs
-  to its own commit or failure, and the first failure (in partition order)
-  is raised after all have finished, so a resume re-runs only the failed
-  partitions.
+  ``min(pending, defaultParallelism, 8)`` partitions run at once
+  (``session.concurrent_jobs``); in pinned-thread mode (PySpark's default)
+  each worker thread inherits the caller's job group and local properties.
+  A failing partition does not stop the others: every pending partition
+  runs to its own commit or failure, and the first failure (in partition
+  order) is raised after all have finished, so a resume re-runs only the
+  failed partitions.
 
 The manifest lives NEXT TO the output and is accessed through the Hadoop
 FileSystem API (``graft/io.py``), so ``out_path`` may be ``file:``,
@@ -52,12 +52,9 @@ from __future__ import annotations
 import json
 import logging
 import time
-import warnings
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.util import inheritable_thread_target
 
 from dataqualitycontroltool_spark.graft import io as gio
 from dataqualitycontroltool_spark.graft.io import corpus_partitions, read_corpus
@@ -67,15 +64,12 @@ from dataqualitycontroltool_spark.graft.pipeline import (
     run_pipeline,
 )
 from dataqualitycontroltool_spark.graft.rules import KeepDropConfig
+from dataqualitycontroltool_spark.session import concurrent_jobs
 
 logger = logging.getLogger(__name__)
 
 MANIFEST_DIR = "_manifest"
 DEDUP_DIR = "_dedup_index"
-# On a cluster defaultParallelism is the total executor core count, which
-# can be thousands; this caps how many partition queries the driver plans
-# and tracks at once.
-_MAX_CONCURRENT_PARTITIONS = 8
 
 
 def _join(base: str, *parts: str) -> str:
@@ -140,21 +134,6 @@ def _dedup_index(
     return spark.read.schema(idx.schema).parquet(idx_path)
 
 
-def _pool_size(n_pending: int, default_parallelism: int) -> int:
-    """Worker threads for ``n_pending`` (at least one) partitions."""
-    return min(n_pending, default_parallelism, _MAX_CONCURRENT_PARTITIONS)
-
-
-def _inherit_local_properties(fn):
-    """``fn`` wrapped to run with a copy, taken now, of this thread's Spark
-    local properties (job group, description); ``fn`` itself when PySpark
-    is not in pinned-thread mode, where JVM threads are not per Python
-    thread.  No session tags are used, so the session form is not needed."""
-    with warnings.catch_warnings():
-        warnings.filterwarnings("ignore", "Spark session is not provided")
-        return inheritable_thread_target(fn)
-
-
 def run_resumable(
     spark: SparkSession,
     in_path: str,
@@ -201,21 +180,8 @@ def run_resumable(
         _commit_manifest(spark, out_path, row)
         return row
 
-    workers = _pool_size(len(pending), spark.sparkContext.defaultParallelism)
-    # each submission is wrapped on this thread, so every partition runs
-    # with its own copy of the caller's local properties: Spark sets the
-    # SQL execution id in them, so the copies must not be shared
-    with ThreadPoolExecutor(workers, thread_name_prefix="run_resumable") as pool:
-        futures = [
-            pool.submit(_inherit_local_properties(write_partition), part)
-            for part in pending
-        ]
-    failed = [(part, f.exception()) for part, f in zip(pending, futures)
-              if f.exception() is not None]
-    for part, exc in failed[1:]:  # only the first failure is raised
-        logger.error("partition %s also failed", part, exc_info=exc)
-    if failed:
-        raise failed[0][1]
+    with concurrent_jobs(spark, len(pending), "run_resumable") as submit:
+        futures = [submit(write_partition, part) for part in pending]
     return [f.result() for f in futures]
 
 

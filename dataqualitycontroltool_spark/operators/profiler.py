@@ -279,14 +279,16 @@ def profile_table(
       (9 before 10), like the direct profilers.
 
     At ``local[2]`` over a one-partition input that is 5 jobs, 7 when a
-    nominal or text field is present.
+    nominal or text field is present.  ``write_report`` runs them on its
+    own thread while its report-table writes are in flight, then writes
+    each profile from its pool.
     ``exact="distributed"`` adds its own per-field rank-selection jobs
     (the 10^12-row-safe quartiles).  Each returned frame is a literal
     frame of at most one row, so collecting or writing it is one job that
     never rescans the source.
 
     The validated frame is ``ValidationPlan(spec).apply(df)`` with every
-    derivation — the same plan ``report_tables`` and
+    derivation — the same SQL-text plan ``report_tables`` and
     ``write_corrected_csv`` build — so when ``report_tables`` has cached
     it, these scans read that one cached frame.  With ``cache=True``
     (default) this call caches it (a no-op when it already is); the
@@ -298,7 +300,7 @@ def profile_table(
     Spec fields absent from the table are skipped (no profile entry) —
     same header-intersection tolerance as ``report_tables``; the missing
     set is the report's job to surface, not an AnalysisException here."""
-    from dataqualitycontroltool_spark.plans.compiler import ValidationPlan
+    from dataqualitycontroltool_spark.plans.compiler import ValidationPlan, quote_ident
 
     present = [f for f in spec.fields if f.name in df.columns]
     validated = ValidationPlan(spec).apply(df)
@@ -308,14 +310,14 @@ def profile_table(
     d = _STAT_DECIMALS
 
     def cast(f):
-        return F.col(f"{f.name}__cast")
+        return F.col(quote_ident(f"{f.name}__cast"))
 
     # ---- one wide aggregate for everything agg-able --------------------
     aggs = []
     for i, f in enumerate(present):
         c = cast(f)
         if f.miptype == "numerical":
-            q = _quartiles_col(validated, f"{f.name}__cast", exact)
+            q = _quartiles_col(validated, quote_ident(f"{f.name}__cast"), exact)
             # rounded INSIDE the plan (F.round = HALF_UP on the shortest
             # decimal repr — Python round() is half-even on the binary
             # double and diverges on ~5% of 7-decimal values)
@@ -327,7 +329,8 @@ def profile_table(
                 F.round(F.mean(c) - threshold * F.stddev_samp(c), d).alias(f"{i}_lb"),
             ]
         if f.miptype == "integer":
-            aggs.append(_quartiles_col(validated, f"{f.name}__cast", exact).alias(f"{i}_q"))
+            aggs.append(_quartiles_col(validated, quote_ident(f"{f.name}__cast"), exact)
+                        .alias(f"{i}_q"))
         if f.miptype in ("numerical", "integer", "date"):
             aggs += [F.min(c).alias(f"{i}_min"), F.max(c).alias(f"{i}_max")]
         if f.miptype == "nominal":

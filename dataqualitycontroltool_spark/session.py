@@ -7,13 +7,29 @@ and shuffle partitions sized to the local core count rather than the 200 default
 On a real cluster the same builder is used; the operator's ``spark-submit``
 ``--master``/``--conf`` govern, and the semantic defaults here fill in only
 where unset.
+
+:func:`concurrent_jobs` is the one way this package submits independent
+Spark jobs from several driver threads at once.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import warnings
+from collections.abc import Iterator
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+logger = logging.getLogger(__name__)
+
+# On a cluster defaultParallelism is the total executor core count, which
+# can be thousands; this caps how many jobs the driver plans and tracks at
+# once.
+_MAX_CONCURRENT_JOBS = 8
 
 
 def get_spark(
@@ -122,3 +138,47 @@ def _ship_package(spark: SparkSession) -> None:
     )
     spark.sparkContext.addPyFile(zpath)
     _shipped.add(key)
+
+
+def _pool_size(n_jobs: int, default_parallelism: int) -> int:
+    """Worker threads for ``n_jobs`` (at least one) concurrent jobs."""
+    return min(n_jobs, default_parallelism, _MAX_CONCURRENT_JOBS)
+
+
+def _inherit_local_properties(fn):
+    """``fn`` wrapped to run with a copy, taken now, of this thread's Spark
+    local properties (job group, description); ``fn`` itself when PySpark
+    is not in pinned-thread mode, where JVM threads are not per Python
+    thread.  No session tags are used, so the session form is not needed."""
+    with warnings.catch_warnings():
+        warnings.filterwarnings("ignore", "Spark session is not provided")
+        return inheritable_thread_target(fn)
+
+
+@contextmanager
+def concurrent_jobs(spark: SparkSession, n_jobs: int, name: str) -> Iterator:
+    """A ``submit(fn, *args)`` that runs ``fn(*args)`` on a pool of
+    ``min(n_jobs, defaultParallelism, 8)`` threads and returns its future;
+    the block's own thread keeps working meanwhile.
+
+    Each submission is wrapped on the submitting thread, so every job runs
+    with its own copy of the caller's local properties (job group,
+    description): Spark sets the SQL execution id in them, so the copies
+    must not be shared.  A failing job does not stop the others: the block
+    exits after every submitted job has finished, then raises the first
+    failure in submission order and logs the rest, each named by its
+    first argument."""
+    submitted = []
+    workers = _pool_size(n_jobs, spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(workers, thread_name_prefix=name) as pool:
+        def submit(fn, *args):
+            future = pool.submit(_inherit_local_properties(fn), *args)
+            submitted.append((args, future))
+            return future
+
+        yield submit
+    failed = [(args, f.exception()) for args, f in submitted if f.exception() is not None]
+    for args, exc in failed[1:]:  # only the first failure is raised
+        logger.error("%s job %s also failed", name, args[0] if args else "", exc_info=exc)
+    if failed:
+        raise failed[0][1]

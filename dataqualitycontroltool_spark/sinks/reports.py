@@ -7,7 +7,9 @@ suggestions; `:151-159` ``save_corrected``): the *metrics* are the contract,
 the spreadsheet rendering is presentation (out of scope per SURVEY §2.1 S7).
 Every table is a small aggregate of the single-pass validated DataFrame —
 compute once (`ValidationPlan.apply`, cached), derive all four tables, the
-profiles and the corrected CSV from it."""
+profiles and the corrected CSV from it.  Like the compiler, the sinks build
+their projections and aggregates as SQL text, every name through
+``quote_ident``."""
 
 from __future__ import annotations
 
@@ -17,10 +19,11 @@ from dataqualitycontroltool_spark.operators import profiler
 from dataqualitycontroltool_spark.plans.compiler import (
     STATUS_CONSTRAINT,
     STATUS_DTYPE,
-    STATUS_MISSING,
-    STATUS_VALID,
     ValidationPlan,
+    quote_ident,
+    sql_literal,
 )
+from dataqualitycontroltool_spark.session import concurrent_jobs
 from dataqualitycontroltool_spark.specs import TableSpec
 
 
@@ -30,18 +33,16 @@ def correction_suggestions(validated: DataFrame, spec: TableSpec) -> DataFrame:
     (tablereport.py:290-320).  Every field's cells are stacked as
     (field, value, suggestion, violation) and counted by ONE groupBy — the
     distinct violated-value domain is small even when violations are many."""
-    cells = F.array(*[
-        F.struct(
-            F.lit(f.name).alias("field"),
-            # cast to string BEFORE stacking: fields have heterogeneous types
-            F.col(f.name).cast("string").alias("value"),
-            F.col(f"{f.name}__suggestion").cast("string").alias("suggestion"),
-            F.col(f"{f.name}__status").alias("violation"),
-        )
+    # values cast to string BEFORE stacking: fields have heterogeneous types
+    cells = ", ".join(
+        f"named_struct('field', {sql_literal(f.name)}, "
+        f"'value', CAST({quote_ident(f.name)} AS STRING), "
+        f"'suggestion', CAST({quote_ident(f'{f.name}__suggestion')} AS STRING), "
+        f"'violation', {quote_ident(f'{f.name}__status')})"
         for f in spec.fields
-    ])
+    )
     return (
-        validated.select(F.inline(cells))
+        validated.selectExpr(f"inline(array({cells}))")
         .where(F.col("violation").isin(STATUS_DTYPE, STATUS_CONSTRAINT))
         .groupBy("field", "value", "suggestion", "violation")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
@@ -54,8 +55,6 @@ _GENERAL = ("total_rows bigint, total_columns int, fields_checked int, "
 _ROW_STATS = "key string, kind string, rows bigint"
 _COLUMN_STATS = ("field string, nulls bigint, valid bigint, dtype_violations bigint, "
                  "constraint_violations bigint, total_rows bigint, filled_pct double")
-# the status counted by each of column_stats' four count columns, in order
-_COUNTED = (STATUS_MISSING, STATUS_VALID, STATUS_DTYPE, STATUS_CONSTRAINT)
 
 
 def report_tables(
@@ -82,12 +81,13 @@ def report_tables(
     Runs ONE wide aggregate at call time (totals, per-field status counts
     and the ``n_valid`` histogram, whose bands give the quantile rows), so
     ``general``, ``row_stats`` and ``column_stats`` are literal frames;
-    ``corrections`` is one lazy stacked groupBy.  At ``local[2]`` over a
-    one-partition CSV this call is 3 jobs (cache build, aggregate map and
-    result stages) and writing the four tables 5 more; the CLI's
-    ``validate --clean`` sink sequence (these tables, ``write_report``
-    with profiles, the corrected CSV) is 16 jobs plus one profile write
-    per field: 22 for the 6-field benchmark table.
+    ``corrections`` is one lazy stacked groupBy.  The plan, the aggregate
+    and the stacked cells are SQL text, a few py4j round trips each.  At
+    ``local[2]`` over a one-partition CSV this call is 3 jobs (cache build,
+    aggregate map and result stages) and writing the four tables 5 more;
+    the CLI's ``validate --clean`` sink sequence (these tables,
+    ``write_report`` with profiles, the corrected CSV) is 16 jobs plus one
+    profile write per field: 22 for the 6-field benchmark table.
 
     Spec fields absent from the table are NOT an error: like the
     reference (tablereport.py:207-208 'Missing columns'/'Extra columns'
@@ -130,13 +130,11 @@ def report_tables(
     n_fields = len(names)
     # one wide aggregate; over an empty table every sum is NULL, and so are
     # the counts, filled_pct and total_violations built from them below
-    aggs = [F.count(F.lit(1))]
-    aggs += [
-        F.sum((F.col(f"{n}__status") == status).cast("long"))
-        for n in names for status in _COUNTED
-    ]
-    aggs += [F.sum((F.col("n_valid") == k).cast("long")) for k in range(n_fields + 1)]
-    wide = list(plan.row_flags(validated).agg(*aggs).first())
+    wide = list(plan.row_flags(validated).selectExpr(
+        "count(1)",
+        *plan.status_counts(),
+        *[f"sum(CAST(n_valid = {k} AS BIGINT))" for k in range(n_fields + 1)],
+    ).first())
     total, counts, hist = wide[0], wide[1:-n_fields - 1], wide[-n_fields - 1:]
 
     column_stats = []
@@ -189,13 +187,26 @@ def write_report(
 
     The profiles come from ``profiler.profile_table`` over the same
     validated plan, so they read the frame ``report_tables`` cached (the
-    caller clears it).  Each profile is a literal frame of at most one row,
-    written by one job to its own ``profile_<field>`` directory."""
-    for name, table in (tables or report_tables(df, spec)).items():
-        table.write.mode("overwrite").parquet(f"{outdir}/{name}")
-    if with_profiles:
-        for fname, prof in profiler.profile_table(df, spec, threshold=threshold).items():
-            prof.write.mode("overwrite").parquet(f"{outdir}/profile_{fname}")
+    caller clears it).  Each table and each profile is a small frame
+    written by one job to its own directory.  The writes are independent,
+    so they run concurrently from ``session.concurrent_jobs`` (the pool
+    ``run_resumable`` uses, under the caller's job group): the four table
+    writes are submitted first, ``profile_table``'s two queries run on
+    this thread while they are in flight, then each profile write is
+    submitted.  A failing write does not stop the others; once all have
+    finished, the first failure in that order is raised."""
+    tables = tables or report_tables(df, spec)
+    n_jobs = len(tables) + (len(spec.fields) if with_profiles else 0)
+
+    def write(path: str, frame: DataFrame) -> None:
+        frame.write.mode("overwrite").parquet(path)
+
+    with concurrent_jobs(df.sparkSession, n_jobs, "write_report") as submit:
+        for name, table in tables.items():
+            submit(write, f"{outdir}/{name}", table)
+        if with_profiles:
+            for fname, prof in profiler.profile_table(df, spec, threshold=threshold).items():
+                submit(write, f"{outdir}/profile_{fname}", prof)
 
 
 def write_corrected_csv(df: DataFrame, spec: TableSpec, path: str) -> None:
@@ -210,11 +221,12 @@ def write_corrected_csv(df: DataFrame, spec: TableSpec, path: str) -> None:
     the input in that one job."""
     spec_names = {f.name for f in spec.fields}
     cols = [
-        F.col(f"{c}__corrected").alias(c) if c in spec_names else F.col(c)
+        f"{quote_ident(f'{c}__corrected')} AS {quote_ident(c)}" if c in spec_names
+        else quote_ident(c)
         for c in df.columns
     ]
     (
-        ValidationPlan(spec).apply(df).select(*cols)
+        ValidationPlan(spec).apply(df).selectExpr(*cols)
         .write.mode("overwrite")
         .option("header", "true")
         .option("quoteAll", "true")

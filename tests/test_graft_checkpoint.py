@@ -8,6 +8,7 @@ import pytest
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
+from dataqualitycontroltool_spark import session
 from dataqualitycontroltool_spark.graft import checkpoint, synth
 from dataqualitycontroltool_spark.graft.pipeline import run_pipeline
 from dataqualitycontroltool_spark.graft.rules import KeepDropConfig
@@ -228,18 +229,19 @@ def test_null_partition_values_are_rejected_before_any_partition(spark, tmp_path
 
 
 def test_pool_size():
-    """Pool sizing is pure: bounded by the pending partitions, by the
+    """Pool sizing (``session.concurrent_jobs``, which runs the pending
+    partitions) is pure: bounded by the pending partitions, by the
     cluster's parallelism and by a fixed cap however many cores or
     partitions there are."""
-    cap = checkpoint._MAX_CONCURRENT_PARTITIONS
+    cap = session._MAX_CONCURRENT_JOBS
     assert 2 <= cap <= 16
-    assert checkpoint._pool_size(1, 2) == 1
-    assert checkpoint._pool_size(1, 4_000) == 1
-    assert checkpoint._pool_size(3, 2) == 2
-    assert checkpoint._pool_size(10_000, 2) == 2
-    assert checkpoint._pool_size(3, 4_000) == 3
-    assert checkpoint._pool_size(10_000, 4_000) == cap
-    assert checkpoint._pool_size(5, 1) == 1
+    assert session._pool_size(1, 2) == 1
+    assert session._pool_size(1, 4_000) == 1
+    assert session._pool_size(3, 2) == 2
+    assert session._pool_size(10_000, 2) == 2
+    assert session._pool_size(3, 4_000) == 3
+    assert session._pool_size(10_000, 4_000) == cap
+    assert session._pool_size(5, 1) == 1
 
 
 def test_unpinned_thread_mode(spark, paths, tmp_path, monkeypatch):
@@ -258,7 +260,7 @@ def test_unpinned_thread_mode(spark, paths, tmp_path, monkeypatch):
 
     with warnings.catch_warnings():
         warnings.simplefilter("error")
-        assert checkpoint._inherit_local_properties(body) is not body
+        assert session._inherit_local_properties(body) is not body
 
     class NotClientServer:
         def __init__(self, gateway):
@@ -268,7 +270,7 @@ def test_unpinned_thread_mode(spark, paths, tmp_path, monkeypatch):
             return getattr(self._gateway, name)
 
     monkeypatch.setattr(SparkContext, "_gateway", NotClientServer(SparkContext._gateway))
-    assert checkpoint._inherit_local_properties(body) is body
+    assert session._inherit_local_properties(body) is body
     out = str(tmp_path / "out")
     rows = checkpoint.run_resumable(spark, in_path, out, KeepDropConfig(),
                                     max_partitions=2)

@@ -213,3 +213,57 @@ def test_profile_ranks_trimmed_before_shuffle(spark):
     ranked = [p for p in plans if "row_number()" in p]
     assert len(ranked) == 1, len(ranked)
     assert "WindowGroupLimit" in ranked[0] and "Partial" in ranked[0]
+
+
+def test_failed_profile_write_lets_the_others_finish(spark, tmp_path, monkeypatch):
+    """``write_report``'s writes run concurrently: two failing profile
+    writes stop no other write, and once all have finished the first
+    failure in submission order (tables, then profiles in field order) is
+    raised."""
+    import pytest
+
+    spec = _spec(FIELDS)
+    df = spark.createDataFrame(list(zip(*COLUMNS.values())), list(COLUMNS))
+    real = profiler.profile_table
+
+    def failing(*args, **kwargs):
+        profiles = real(*args, **kwargs)
+        for name in ("w", "t"):  # field order: w before t
+            profiles[name] = profiles[name].where(
+                F.raise_error(F.lit(f"injected failure in {name}")).isNull())
+        return profiles
+
+    monkeypatch.setattr(profiler, "profile_table", failing)
+    out = tmp_path / "out"
+    for _ in range(2):
+        with pytest.raises(Exception, match="injected failure in w"):
+            reports.write_report(df, spec, str(out))
+    spark.catalog.clearCache()
+    written = {"general", "row_stats", "column_stats", "corrections",
+               *[f"profile_{f['name']}" for f in FIELDS if f["name"] not in ("w", "t")]}
+    for name in written:
+        assert (out / name / "_SUCCESS").exists(), name
+    assert not (out / "profile_w" / "_SUCCESS").exists()
+    assert not (out / "profile_t" / "_SUCCESS").exists()
+
+
+def test_write_report_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """Every job ``write_report`` runs, on its pool threads included,
+    belongs to the caller's job group."""
+    spec = _spec(FIELDS)
+    df = spark.createDataFrame(list(zip(*COLUMNS.values())), list(COLUMNS))
+    sc = spark.sparkContext
+    tables = reports.report_tables(df, spec)
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+    group = "write-report-group"
+    sc.setJobGroup(group, "write_report")
+    try:
+        reports.write_report(df, spec, str(tmp_path / "out"), tables=tables)
+    finally:
+        sc.setJobGroup(None, None)
+    spark.catalog.clearCache()
+    # the tracker keeps only the latest jobs, so older ungrouped ids may
+    # have dropped out; none may have been added
+    assert not set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped
+    # one write per table and per profile, and profile_table's queries
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) > 4 + len(FIELDS)
